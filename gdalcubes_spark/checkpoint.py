@@ -22,15 +22,13 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Iterable, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube
+from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_rows
 from gdalcubes_spark.grid import ChunkGrid, CubeView
 
 _METRIC_SCHEMA = T.StructType([
@@ -44,9 +42,10 @@ _METRIC_SCHEMA = T.StructType([
 ])
 
 
-def _with_metrics(df):
-    """Wrap chunk rows so each pass also emits a per-partition metrics row
-    (returned as a second DataFrame via an extra marker column)."""
+def _with_metrics(cube: Cube):
+    """The cube's chunk rows, each with its partition id, NaN count and the
+    milliseconds spent counting and packing it. The metrics step runs in the
+    UDF that makes the chunks (Cube.stream)."""
     from pyspark import TaskContext
 
     combined = T.StructType(CHUNK_SCHEMA.fields + [
@@ -55,30 +54,21 @@ def _with_metrics(df):
         T.StructField("wall_ms", T.DoubleType(), False),
     ])
 
-    def gen(batches: Iterable[pd.DataFrame]):
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for pdf in batches:
-            t0 = time.time()
-            if len(pdf) == 0:
-                yield pd.DataFrame({f.name: pd.Series(dtype="object") for f in combined.fields})
-                continue
-            nnan = []
-            for _, row in pdf.iterrows():
-                a = np.frombuffer(row["data"], dtype="<f8")
-                nnan.append(int(np.isnan(a).sum()))
-            out = pdf.copy()
-            out["partition_id"] = pid
-            out["n_nan"] = nnan
-            out["wall_ms"] = (time.time() - t0) * 1000.0 / max(len(pdf), 1)
-            yield out
+    def metrics(cid, coords, t):
+        t0 = time.time()
+        ctx = TaskContext.get()
+        row = chunk_rows(cid, coords, t)[0]
+        row.update(partition_id=ctx.partitionId() if ctx else -1, n_nan=int(np.isnan(t).sum()),
+                   wall_ms=(time.time() - t0) * 1000.0)
+        return [row]
 
-    return df.mapInPandas(gen, combined)
+    return cube.stream(metrics, combined)
 
 
 def write_checkpoint(cube: Cube, path: str, mode: str = "overwrite") -> None:
     """Materialize cube + per-partition lineage/metrics (one pass)."""
     spark = cube.df.sparkSession
-    enriched = _with_metrics(cube.df)
+    enriched = _with_metrics(cube)
     enriched.persist()
     try:
         chunk_cols = [f.name for f in CHUNK_SCHEMA.fields]
@@ -136,7 +126,7 @@ def resume(cube: Cube, path: str) -> int:
     n = missing.count()
     if n > 0:
         remaining = Cube(missing, cube.view, cube.bands, cube.chunking)
-        enriched = _with_metrics(remaining.df)
+        enriched = _with_metrics(remaining)
         enriched.persist()
         try:
             enriched.select([f.name for f in CHUNK_SCHEMA.fields]).write.mode("append").parquet(f"{path}/chunks")

@@ -25,7 +25,6 @@ band data entering gdalcubes (image_collection.h:49).
 
 from __future__ import annotations
 
-import hashlib
 import struct
 import zlib
 
@@ -676,11 +675,4 @@ def phash64(a: np.ndarray) -> int:
     v = 0
     for bit in bits:
         v = (v << 1) | int(bit)
-    return v - (1 << 64) if v >= (1 << 63) else v
-
-
-def content_hash64(key: str) -> int:
-    """Stable 64-bit content id from a string key (blake2b)."""
-    d = hashlib.blake2b(key.encode(), digest_size=8).digest()
-    v = int.from_bytes(d, "big")
     return v - (1 << 64) if v >= (1 << 63) else v

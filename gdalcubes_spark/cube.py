@@ -16,6 +16,24 @@ Scale notes:
   the tens of MB so a single Arrow batch / Spark task handles a few chunks.
 - chunk_id is the deterministic partition/join key (cube.h:495-497); narrow
   ops are mapInPandas (no shuffle), wide ops shuffle on a chunk-coord subset.
+
+Producers and fusion — one Python round trip per chunk per stage:
+- Every chunk tensor comes out of one Python UDF, the cube's Producer: a
+  DataFrame, its group keys and make(key, pdf) → (chunk_id, coords, tensor).
+  The grouped producers are the raster_cube build and salted merge,
+  from_cells, the fill_time gather, the window_time/window_space assemble,
+  the aggregate merge, and the reduce_time/reduce_space merge and gather. A
+  cube without one (dummy, parquet, checkpoint, array sources) streams its
+  own chunk rows through a mapInPandas.
+- map_chunks appends its fn to the cube's pending narrow chain; the chain
+  runs in the producer's worker, after make and before packing.
+- A wide consumer hands its map-side step (halo emit, aggregate cut, reduce
+  partial, cells() explode, checkpoint metrics) to Cube.stream, which runs it
+  in the same worker on the unpacked tensor. The packed chunk row in between
+  never crosses the Arrow boundary.
+- Cube.df is producer + chain + packed chunk rows; consumers that group
+  chunk rows (gathers, joins, sinks) read it. A cached df is read, not
+  recomputed.
 """
 
 from __future__ import annotations
@@ -58,22 +76,22 @@ CELL_SCHEMA = T.StructType(
 
 
 def pin_group_partitions(df: DataFrame, keys, n_groups: int) -> DataFrame:
-    """Repartition by `keys` with an EXPLICIT partition count before a
-    groupBy().applyInPandas over chunk tensors.
+    """Repartition by `keys` into ONE wave of tasks, min(groups,
+    defaultParallelism), before a groupBy().applyInPandas over chunk tensors.
 
     AQE coalesces post-shuffle partitions by byte size, but tensor-UDF stages
     (decode, focal windows, PIP extraction, exact-median gathers) cost orders
     of magnitude more per byte than columnar work — byte-based coalescing was
     observed collapsing 32 cores' worth of decode onto 5 tasks. A
     user-numbered repartition satisfies the downstream clustering requirement
-    (no second exchange) and AQE leaves it alone. Count = 4× cluster
-    parallelism (scheduler slack for per-group cost variance), capped by the
-    number of groups."""
-    try:
-        par = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:
-        par = 32
-    n = max(1, min(int(n_groups), 4 * par))
+    (no second exchange) and AQE leaves it alone.
+
+    One wave and no more: every Python UDF task pays a fixed cost before any
+    engine code runs. A no-op mapInPandas on a 4-CPU host at local[4] costs
+    about 0.29 core-s per task (16 tasks vs 4), most of it pyspark's
+    per-task importlib.invalidate_caches(). Extra tasks per core multiply
+    that cost and add no parallelism."""
+    n = max(1, min(int(n_groups), df.sparkSession.sparkContext.defaultParallelism))
     return df.repartition(n, *([keys] if isinstance(keys, str) else list(keys)))
 
 
@@ -84,41 +102,70 @@ def tensor_of(row) -> np.ndarray:
     )
 
 
-def chunk_stream(cube):
-    """(df, xform) for WIDE operators consuming a cube's chunk rows inside
-    their own UDF: `df` is the DataFrame to map over and `xform(tensor,
-    (ct,cy,cx)) -> tensor | None` applies any pending fused narrow chain
-    (None ⇒ treat the chunk as elided/all-NaN, same invariant as map_chunks).
-
-    Using this instead of `cube.df` + `tensor_of` lets a narrow chain fuse
-    INTO the wide op's first UDF — e.g. scan → apply_pixel → reduce gather
-    runs the apply inside the gather's emit, removing a standalone
-    mapInPandas node (one full-cube Arrow round-trip)."""
-    base = cube._fuse_base
-    if base is None:
-        # scan-fused cubes carry a LAZY bare-scan base (built only when a
-        # stream consumer actually wants it — see _attach_scan_fusion)
-        thunk = getattr(cube, "_fuse_base_thunk", None)
-        if thunk is not None:
-            base = cube._fuse_base = thunk()
-    if base is None:
-        base = cube.df
-    chain = tuple(cube._fuse_chain or ())
-    if not chain:
-        return cube.df, (lambda t, coords: t)
-
-    def xform(t, coords):
-        for f in chain:
-            t = f(t, coords)
-            if t is None or (isinstance(t, np.ndarray) and np.all(np.isnan(t))):
-                return None
-        return t
-
-    return base, xform
-
-
 def pack_tensor(a: np.ndarray) -> bytes:
     return np.ascontiguousarray(a, dtype="<f8").tobytes()
+
+
+CHUNK_COLUMNS = CHUNK_SCHEMA.fieldNames()
+
+
+def chunk_items(key, pdf: pd.DataFrame):
+    """(chunk_id, (ct, cy, cx), tensor) for each chunk row of a pandas batch,
+    read column-wise. Also the make() of a cube that streams its own rows."""
+    for cid, ct, cy, cx, nb, nt, ny, nx, data in zip(*(pdf[c].to_numpy() for c in CHUNK_COLUMNS)):
+        yield int(cid), (int(ct), int(cy), int(cx)), \
+            np.frombuffer(data, dtype="<f8").reshape(int(nb), int(nt), int(ny), int(nx))
+
+
+def chunk_rows(cid: int, coords, t: np.ndarray) -> list:
+    """The default step: the chunk as one packed CHUNK_SCHEMA row."""
+    nb, nt, ny, nx = t.shape
+    return [dict(chunk_id=cid, ct=coords[0], cy=coords[1], cx=coords[2], nb=nb, nt=nt, ny=ny, nx=nx,
+                 data=pack_tensor(t))]
+
+
+@dataclass(frozen=True)
+class Producer:
+    """How a cube's chunks are made: one Python UDF over `source`, grouped by
+    `keys` (None: over batches of source rows), whose make(key, pdf) yields
+    (chunk_id, (ct, cy, cx), tensor) items."""
+
+    source: DataFrame
+    keys: Optional[tuple]
+    make: Callable
+
+    def run(self, chain: tuple, step, schema: T.StructType) -> DataFrame:
+        """The one UDF: every made chunk goes through the narrow `chain`, then
+        step(chunk_id, coords, tensor) turns it into `schema` rows (a list of
+        row dicts or a pandas frame). A chain fn returning None or an all-NaN
+        tensor drops the chunk — the missing chunk ≡ all-NaN invariant."""
+        names, make = schema.fieldNames(), self.make
+
+        def frame(items) -> pd.DataFrame:
+            rows, frames = [], []
+            for cid, coords, t in items:
+                for f in chain:
+                    t = f(t, coords)
+                    if t is None or np.all(np.isnan(t)):
+                        break
+                else:
+                    out = step(cid, coords, t)
+                    if isinstance(out, pd.DataFrame):
+                        frames.append(out)
+                    else:
+                        rows.extend(out)
+            if rows:
+                return pd.DataFrame(rows, columns=names)
+            return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(columns=names)
+
+        if self.keys is None:
+            def udf(batches: Iterable[pd.DataFrame]):
+                for pdf in batches:
+                    out = frame(make(None, pdf))
+                    if len(out):
+                        yield out
+            return self.source.mapInPandas(udf, schema)
+        return self.source.groupBy(*self.keys).applyInPandas(lambda key, pdf: frame(make(key, pdf)), schema)
 
 
 @dataclass
@@ -133,14 +180,12 @@ class Cube:
     view: CubeView
     bands: List[str]
     chunking: ChunkGrid
-    # Narrow-op fusion state: when this cube's df was produced by map_chunks,
-    # _fuse_base is the pre-UDF DataFrame and _fuse_chain the tensor fns applied
-    # to it. A subsequent map_chunks composes onto the chain so N chained narrow
-    # ops cross the JVM↔Python Arrow boundary ONCE, not N times (the Python-side
-    # analogue of whole-stage codegen). df itself is always fully materialized
-    # and valid — fusion only changes how the NEXT narrow op builds its plan.
-    _fuse_base: Optional[DataFrame] = field(default=None, repr=False, compare=False)
-    _fuse_chain: tuple = field(default=(), repr=False, compare=False)
+    # How df is made (module docstring): the producing UDF and the narrow
+    # chain it applies. df itself is always complete and valid; these only
+    # change how the NEXT narrow op or wide consumer builds its plan. None:
+    # df's own rows feed the next UDF.
+    _producer: Optional[Producer] = field(default=None, repr=False, compare=False)
+    _chain: tuple = field(default=(), repr=False, compare=False)
 
     # ------------------------------------------------------------------ meta
     @property
@@ -155,6 +200,30 @@ class Cube:
         return Cube(df, view or self.view, list(bands or self.bands), chunking or self.chunking)
 
     # ----------------------------------------------------------- chunk plumbing
+    @staticmethod
+    def produce(producer: Producer, view: CubeView, bands: List[str], chunking: ChunkGrid,
+                chain: tuple = ()) -> "Cube":
+        """The cube whose chunks `producer` makes, with `chain` applied."""
+        cube = Cube(producer.run(chain, chunk_rows, CHUNK_SCHEMA), view, list(bands), chunking)
+        cube._producer, cube._chain = producer, tuple(chain)
+        return cube
+
+    def _pending(self):
+        """(producer, chain) that yield this cube's chunks. A cube with no
+        producer, or whose df is cached, streams its own df rows."""
+        if self._producer is None or self.df.is_cached:
+            return Producer(self.df, None, chunk_items), ()
+        return self._producer, self._chain
+
+    def stream(self, step, schema: T.StructType) -> DataFrame:
+        """Run a wide consumer's map-side step on this cube's chunks inside
+        the UDF that makes them: step(chunk_id, (ct, cy, cx), tensor) → row
+        dicts or a pandas frame of `schema`. Halo emits, aggregate cuts,
+        reduce partials, cells() and checkpoint metrics use this, so they add
+        no Python node of their own."""
+        producer, chain = self._pending()
+        return producer.run(chain, step, schema)
+
     def map_chunks(
         self,
         fn: Callable[[np.ndarray, tuple], Optional[np.ndarray]],
@@ -167,55 +236,16 @@ class Cube:
         Output chunk grid must keep the same (ct,cy,cx) chunk coordinates
         unless out_chunking says otherwise.
 
-        Chained narrow ops FUSE: if this cube itself came out of map_chunks,
-        the new fn is composed onto the existing tensor-fn chain over the
-        original pre-UDF DataFrame, so `apply_pixel → filter_pixel → reduce`
-        runs as ONE mapInPandas (one Arrow round-trip, one pack/unpack per
-        chunk) instead of one per operator. Legal because map_chunks preserves
-        chunk coordinates and dropping an all-NaN intermediate equals the
-        missing-chunk ≡ all-NaN invariant the unfused plan enforces between
-        stages."""
-        view = out_view or self.view
-        bands = list(out_bands or self.bands)
-        chunking = out_chunking or self.chunking
-        # scan-side fusion: a cube produced by raster_cube exposes a rebuild
-        # hook that applies the tensor fn INSIDE the scan's build UDF (after
-        # aggregation, before pack/emit) — the narrow op then costs zero
-        # extra Arrow round trips and, when it narrows the tensor (e.g. an
-        # NDVI apply_pixel halving band count), the downstream shuffle moves
-        # the narrowed bytes
-        hook = getattr(self, "_fuse_into_scan", None)
-        if hook is not None:
-            return hook(fn, view, bands, chunking)
-        base = self._fuse_base if self._fuse_base is not None else self.df
-        chain = tuple(self._fuse_chain) + (fn,)
-
-        def gen(batches: Iterable[pd.DataFrame]):
-            for pdf in batches:
-                out = []
-                for _, row in pdf.iterrows():
-                    r = tensor_of(row)
-                    coords = (int(row["ct"]), int(row["cy"]), int(row["cx"]))
-                    for f in chain:
-                        r = f(r, coords)
-                        if r is None or (isinstance(r, np.ndarray) and np.all(np.isnan(r))):
-                            r = None
-                            break
-                    if r is None:
-                        continue
-                    nb, nt, ny, nx = r.shape
-                    out.append(
-                        dict(chunk_id=int(row["chunk_id"]), ct=coords[0], cy=coords[1],
-                             cx=coords[2], nb=nb, nt=nt, ny=ny, nx=nx, data=pack_tensor(r))
-                    )
-                yield pd.DataFrame(out, columns=[f.name for f in CHUNK_SCHEMA.fields]) if out else pd.DataFrame(
-                    {f.name: pd.Series(dtype="object") for f in CHUNK_SCHEMA.fields}
-                )
-
-        fused = self._derive(base.mapInPandas(gen, CHUNK_SCHEMA), view, bands, chunking)
-        fused._fuse_base = base
-        fused._fuse_chain = chain
-        return fused
+        Chained narrow ops FUSE: fn is appended to this cube's pending chain
+        and runs in the UDF that makes the chunks — a scan build, a wide
+        operator's merge, or one mapInPandas over plain chunk rows — so
+        `apply_pixel → filter_pixel → reduce` costs no Arrow round-trip of
+        its own. Legal because map_chunks preserves chunk coordinates and
+        dropping an all-NaN intermediate equals the missing-chunk ≡ all-NaN
+        invariant the unfused plan enforces between stages."""
+        producer, chain = self._pending()
+        return Cube.produce(producer, out_view or self.view, list(out_bands or self.bands),
+                            out_chunking or self.chunking, chain + (fn,))
 
     # ------------------------------------------------------------- long format
     def cells(self, drop_nan: bool = True, band_as_index: bool = False) -> DataFrame:
@@ -223,7 +253,7 @@ class Cube:
         *global* cell indices. Set-oriented ops and the SQL-oracle comparisons
         run on this form. drop_nan mirrors the reference's convention that
         NaN == absent."""
-        bands = list(self.bands)
+        bands = np.array(self.bands, dtype=object)
         g = self.chunking
 
         schema = CELL_SCHEMA if not band_as_index else T.StructType(
@@ -236,38 +266,20 @@ class Cube:
             ]
         )
 
-        base_df, xf = chunk_stream(self)  # fuse any pending narrow chain in here
+        def explode(cid, coords, t):
+            (t0, _), (y0, _), (x0, _) = g.chunk_cell_range(*coords)
+            bi, ti, yi, xi = np.unravel_index(np.arange(t.size), t.shape)
+            v = t.ravel()
+            if drop_nan:
+                keep = ~np.isnan(v)
+                bi, ti, yi, xi, v = bi[keep], ti[keep], yi[keep], xi[keep], v[keep]
+            if len(v) == 0:
+                return []
+            return pd.DataFrame(dict(
+                it=(ti + t0).astype("int32"), iy=(yi + y0).astype("int32"), ix=(xi + x0).astype("int32"),
+                band=bi.astype("int32") if band_as_index else bands[bi], value=v))
 
-        def gen(batches: Iterable[pd.DataFrame]):
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    coords = (int(row["ct"]), int(row["cy"]), int(row["cx"]))
-                    t = xf(tensor_of(row), coords)
-                    if t is None:
-                        continue
-                    nb, nt, ny, nx = t.shape
-                    (t0, _), (y0, _), (x0, _) = g.chunk_cell_range(*coords)
-                    bi, ti, yi, xi = np.unravel_index(np.arange(t.size), t.shape)
-                    v = t.ravel()
-                    if drop_nan:
-                        keep = ~np.isnan(v)
-                        bi, ti, yi, xi, v = bi[keep], ti[keep], yi[keep], xi[keep], v[keep]
-                    if len(v) == 0:
-                        continue
-                    band_col = bi.astype("int32") if band_as_index else np.array(bands, dtype=object)[bi]
-                    yield pd.DataFrame(
-                        dict(
-                            it=(ti + t0).astype("int32"), iy=(yi + y0).astype("int32"),
-                            ix=(xi + x0).astype("int32"), band=band_col, value=v,
-                        )
-                    )
-                yield pd.DataFrame(
-                    dict(it=pd.Series(dtype="int32"), iy=pd.Series(dtype="int32"), ix=pd.Series(dtype="int32"),
-                         band=pd.Series(dtype="object" if not band_as_index else "int32"),
-                         value=pd.Series(dtype="float64"))
-                )
-
-        return base_df.mapInPandas(gen, schema)
+        return self.stream(explode, schema)
 
     @staticmethod
     def from_cells(cells_df: DataFrame, view: CubeView, bands: List[str], chunking: ChunkGrid) -> "Cube":
@@ -285,23 +297,19 @@ class Cube:
 
         nb = len(bands)
 
-        def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def assemble(key, pdf: pd.DataFrame):
             cid = int(key[0])
-            ict, icy, icx = g.chunk_coords(cid)
-            (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(ict, icy, icx)
+            coords = g.chunk_coords(cid)
+            (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(*coords)
             t = np.full((nb, t1 - t0, y1 - y0, x1 - x0), np.nan)
             bi = pdf["band"].map(b2i).to_numpy()
             t[bi, pdf["it"].to_numpy() - t0, pdf["iy"].to_numpy() - y0, pdf["ix"].to_numpy() - x0] = (
                 pdf["value"].to_numpy()
             )
-            return pd.DataFrame(
-                [dict(chunk_id=cid, ct=ict, cy=icy, cx=icx, nb=nb, nt=t1 - t0, ny=y1 - y0, nx=x1 - x0,
-                      data=pack_tensor(t))]
-            )
+            yield cid, coords, t
 
-        out = (pin_group_partitions(df, "chunk_id", chunking.n_chunks)
-               .groupBy("chunk_id").applyInPandas(assemble, CHUNK_SCHEMA))
-        return Cube(out, view, list(bands), chunking)
+        pinned = pin_group_partitions(df, "chunk_id", chunking.n_chunks)
+        return Cube.produce(Producer(pinned, ("chunk_id",), assemble), view, bands, chunking)
 
     # ---------------------------------------------------------------- collect
     def collect_array(self) -> np.ndarray:

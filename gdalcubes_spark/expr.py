@@ -16,7 +16,7 @@ oracles.
 from __future__ import annotations
 
 import ast
-from typing import Callable, Dict, List, Set
+from typing import Callable, Dict, Set
 
 import numpy as np
 
@@ -126,23 +126,6 @@ class CompiledExpr:
 
 def compile_expr(source: str) -> CompiledExpr:
     return CompiledExpr(source)
-
-
-def band_usage(exprs: List[str], bands: List[str]) -> List[Set[str]]:
-    """Per-expression used-band analysis (apply_pixel.h:116-127): bind only
-    referenced inputs. Band names match case-insensitively like the reference
-    (lowercased variable table)."""
-    lower = {b.lower(): b for b in bands}
-    out = []
-    for e in exprs:
-        used = set()
-        for v in CompiledExpr(e).variables:
-            if v in lower:
-                used.add(lower[v])
-            elif v in bands:
-                used.add(v)
-        out.append(used)
-    return out
 
 
 _SQL_FUNCS = {"ln": "ln", "log": "ln", "log10": "log10", "atan2": "atan2", "pow": "power",

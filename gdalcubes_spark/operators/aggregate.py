@@ -21,14 +21,14 @@ from __future__ import annotations
 
 import itertools
 import math
-from typing import Iterable, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_stream, pack_tensor, tensor_of
+from gdalcubes_spark.cube import Cube, Producer, pack_tensor
 from gdalcubes_spark.grid import ChunkGrid, Duration
 
 AGG_METHODS = ("mean", "min", "max", "median", "count", "var", "sd", "prod", "sum")
@@ -56,56 +56,47 @@ def _aggregate(cube: Cube, out_view, gout: ChunkGrid, t_map: np.ndarray,
     g = cube.chunking
     nb = len(cube.bands)
 
-    base_df, _xf = chunk_stream(cube)  # fuse any pending narrow chain in here
-
-    def cut(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                ict, icy, icx = int(row["ct"]), int(row["cy"]), int(row["cx"])
-                tsr = _xf(tensor_of(row), (ict, icy, icx))
-                if tsr is None:
-                    continue
-                (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(ict, icy, icx)
-                ot = t_map[t0:t1]
-                oy = y_map[y0:y1]
-                ox = x_map[x0:x1]
-                # output chunk coords touched by this input chunk
-                kts = np.unique(ot // gout.ct)
-                kys = np.unique(oy // gout.cy)
-                kxs = np.unique(ox // gout.cx)
-                for kt, ky, kx in itertools.product(kts, kys, kxs):
-                    st = ot // gout.ct == kt
-                    sy = oy // gout.cy == ky
-                    sx = ox // gout.cx == kx
-                    piece = tsr[:, st][:, :, sy][:, :, :, sx]
-                    if np.all(np.isnan(piece)):
-                        continue
-                    (pt0, _), (py0, _), (px0, _) = gout.chunk_cell_range(int(kt), int(ky), int(kx))
-                    rows.append(dict(
-                        ocid=gout.chunk_id(int(kt), int(ky), int(kx)),
-                        gmap_t=(ot[st] - pt0).astype("<i8").tobytes(),
-                        gmap_y=(oy[sy] - py0).astype("<i8").tobytes(),
-                        gmap_x=(ox[sx] - px0).astype("<i8").tobytes(),
-                        nb=nb, nt=int(st.sum()), ny=int(sy.sum()), nx=int(sx.sum()),
-                        data=pack_tensor(piece)))
-            yield pd.DataFrame(rows, columns=[f.name for f in _PIECE_SCHEMA.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in _PIECE_SCHEMA.fields})
+    def cut(cid, coords, tsr):
+        (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(*coords)
+        ot = t_map[t0:t1]
+        oy = y_map[y0:y1]
+        ox = x_map[x0:x1]
+        # output chunk coords touched by this input chunk
+        kts = np.unique(ot // gout.ct)
+        kys = np.unique(oy // gout.cy)
+        kxs = np.unique(ox // gout.cx)
+        rows = []
+        for kt, ky, kx in itertools.product(kts, kys, kxs):
+            st = ot // gout.ct == kt
+            sy = oy // gout.cy == ky
+            sx = ox // gout.cx == kx
+            piece = tsr[:, st][:, :, sy][:, :, :, sx]
+            if np.all(np.isnan(piece)):
+                continue
+            (pt0, _), (py0, _), (px0, _) = gout.chunk_cell_range(int(kt), int(ky), int(kx))
+            rows.append(dict(
+                ocid=gout.chunk_id(int(kt), int(ky), int(kx)),
+                gmap_t=(ot[st] - pt0).astype("<i8").tobytes(),
+                gmap_y=(oy[sy] - py0).astype("<i8").tobytes(),
+                gmap_x=(ox[sx] - px0).astype("<i8").tobytes(),
+                nb=nb, nt=int(st.sum()), ny=int(sy.sum()), nx=int(sx.sum()),
+                data=pack_tensor(piece)))
+        return rows
 
     fn = _PANDAS_AGG[method]
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(key, pdf: pd.DataFrame):
         ocid = int(key[0])
         kt, ky, kx = gout.chunk_coords(ocid)
         ntc, nyc, nxc = gout.chunk_shape(kt, ky, kx)
         groups, values = [], []
-        for _, row in pdf.iterrows():
-            p = tensor_of(row)
-            lt = np.frombuffer(row["gmap_t"], dtype="<i8")
-            ly = np.frombuffer(row["gmap_y"], dtype="<i8")
-            lx = np.frombuffer(row["gmap_x"], dtype="<i8")
-            nb_, pnt, pny, pnx = p.shape
-            gid = (np.arange(nb_)[:, None, None, None] * (ntc * nyc * nxc)
+        for gt, gy, gx, pnt, pny, pnx, data in zip(*(pdf[c].to_numpy() for c in (
+                "gmap_t", "gmap_y", "gmap_x", "nt", "ny", "nx", "data"))):
+            p = np.frombuffer(data, dtype="<f8").reshape(nb, pnt, pny, pnx)
+            lt = np.frombuffer(gt, dtype="<i8")
+            ly = np.frombuffer(gy, dtype="<i8")
+            lx = np.frombuffer(gx, dtype="<i8")
+            gid = (np.arange(nb)[:, None, None, None] * (ntc * nyc * nxc)
                    + lt[None, :, None, None] * (nyc * nxc)
                    + ly[None, None, :, None] * nxc
                    + lx[None, None, None, :])
@@ -121,13 +112,11 @@ def _aggregate(cube: Cube, out_view, gout: ChunkGrid, t_map: np.ndarray,
         # where an input chunk contributed → matches the non-empty-chunk rule
         out[idx] = res
         t = out.reshape(nb, ntc, nyc, nxc)
-        if np.all(np.isnan(t)):
-            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-        return pd.DataFrame([dict(chunk_id=ocid, ct=kt, cy=ky, cx=kx, nb=nb, nt=ntc,
-                                  ny=nyc, nx=nxc, data=pack_tensor(t))])
+        if not np.all(np.isnan(t)):
+            yield ocid, (kt, ky, kx), t
 
-    out_df = base_df.mapInPandas(cut, _PIECE_SCHEMA).groupBy("ocid").applyInPandas(merge, CHUNK_SCHEMA)
-    return Cube(out_df, out_view, list(cube.bands), gout)
+    pieces = cube.stream(cut, _PIECE_SCHEMA)
+    return Cube.produce(Producer(pieces, ("ocid",), merge), out_view, cube.bands, gout)
 
 
 def aggregate_time(cube: Cube, dt: Optional[str] = None, fact: Optional[int] = None,

@@ -22,12 +22,12 @@ Spark shapes (designed for the 100 TB case):
 from __future__ import annotations
 
 import re
-from typing import Iterable, List, Optional, Sequence, Tuple
+from typing import List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_stream, pack_tensor, pin_group_partitions, tensor_of
+from gdalcubes_spark.cube import Cube, Producer, chunk_items, pack_tensor, pin_group_partitions
 from gdalcubes_spark.grid import ChunkGrid
 from gdalcubes_spark import reducers as R
 
@@ -106,37 +106,24 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
             T.StructField("state", T.BinaryType(), False),
         ])
 
-        base_df, xf = chunk_stream(cube)  # fuse any pending narrow chain in here
+        def partial(cid, coords, t):
+            ct, cy, cx = coords
+            (t0, t1), _, _ = g.chunk_cell_range(*coords)
+            td = _t_doubles(view, np.arange(t0, t1))
+            blobs = []
+            for r, bi in zip(rnames, bidx):
+                st = R.partial_state(r, t[bi], td)
+                blobs.extend(st[k] for k in R.STATE_KEYS[r])
+            return [dict(skey=cy * g.ncx + cx, cy=cy, cx=cx, ct=ct, ny=t.shape[2], nx=t.shape[3],
+                         state=pack_tensor(np.stack(blobs, axis=0)))]
 
-        def mk_partial(batches: Iterable[pd.DataFrame]):
-            for pdf in batches:
-                rows = []
-                for _, row in pdf.iterrows():
-                    coords = (int(row["ct"]), int(row["cy"]), int(row["cx"]))
-                    t = xf(tensor_of(row), coords)
-                    if t is None:
-                        continue
-                    (t0, t1), _, _ = g.chunk_cell_range(*coords)
-                    its = np.arange(t0, t1)
-                    td = _t_doubles(view, its)
-                    blobs = []
-                    for r, bi in zip(rnames, bidx):
-                        st = R.partial_state(r, t[bi], td)
-                        blobs.extend(st[k] for k in R.STATE_KEYS[r])
-                    state = np.stack(blobs, axis=0)
-                    rows.append(dict(skey=int(row["cy"]) * g.ncx + int(row["cx"]), cy=int(row["cy"]),
-                                     cx=int(row["cx"]), ct=int(row["ct"]), ny=t.shape[2], nx=t.shape[3],
-                                     state=pack_tensor(state)))
-                yield pd.DataFrame(rows, columns=[f.name for f in part_schema.fields]) if rows else \
-                    pd.DataFrame({f.name: pd.Series(dtype="object") for f in part_schema.fields})
-
-        def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def merge_group(key, pdf: pd.DataFrame):
             pdf = pdf.sort_values("ct")  # time order matters for which_*
             ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
             nstates = sum(len(R.STATE_KEYS[r]) for r in rnames)
             acc = None
-            for _, row in pdf.iterrows():
-                st = np.frombuffer(row["state"], dtype="<f8").reshape(nstates, ny, nx)
+            for state in pdf["state"]:
+                st = np.frombuffer(state, dtype="<f8").reshape(nstates, ny, nx)
                 if acc is None:
                     acc = st.copy()
                     continue
@@ -157,24 +144,18 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
                 off += len(ks)
             t = np.stack(out, axis=0)[:, None, :, :]
             cy, cx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
-            cid = gout.chunk_id(0, cy, cx)
-            return pd.DataFrame([dict(chunk_id=cid, ct=0, cy=cy, cx=cx, nb=t.shape[0], nt=1,
-                                      ny=ny, nx=nx, data=pack_tensor(t))])
+            yield gout.chunk_id(0, cy, cx), (0, cy, cx), t
 
-        part = base_df.mapInPandas(mk_partial, part_schema)
-        out_df = part.groupBy("skey").applyInPandas(merge_group, CHUNK_SCHEMA)
-        return Cube(out_df, out_view, out_bands, gout)
+        parts = cube.stream(partial, part_schema)
+        return Cube.produce(Producer(parts, ("skey",), merge_group), out_view, out_bands, gout)
 
     # ---- gather path (exact quantiles) --------------------------------------
     from pyspark.sql import functions as F
 
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ct")
-        ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
+    def gather(key, pdf: pd.DataFrame):
         vals, its = [], []
-        for _, row in pdf.iterrows():
-            t = tensor_of(row)
-            (t0, t1), _, _ = g.chunk_cell_range(int(row["ct"]), int(row["cy"]), int(row["cx"]))
+        for _, (ct, cy, cx), t in sorted(chunk_items(key, pdf), key=lambda item: item[1]):
+            (t0, t1), _, _ = g.chunk_cell_range(ct, cy, cx)
             vals.append(t)
             its.append(np.arange(t0, t1))
         v = np.concatenate(vals, axis=1)  # (nb, T, ny, nx)
@@ -182,16 +163,11 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
         td = _t_doubles(view, its) if any(r.startswith("which") for r in rnames) else None
         outs = [R.full_reduce(r, v[bi], its, td) for r, bi in zip(rnames, bidx)]
         t = np.stack(outs, axis=0)[:, None, :, :]
-        cy, cx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
-        cid = gout.chunk_id(0, cy, cx)
-        return pd.DataFrame([dict(chunk_id=cid, ct=0, cy=cy, cx=cx, nb=t.shape[0], nt=1,
-                                  ny=ny, nx=nx, data=pack_tensor(t))])
+        yield gout.chunk_id(0, cy, cx), (0, cy, cx), t
 
-    from pyspark.sql import functions as F
     keyed = cube.df.withColumn("skey", F.col("cy").cast("long") * g.ncx + F.col("cx"))
-    out_df = (pin_group_partitions(keyed, "skey", g.ncy * g.ncx)
-              .groupBy("skey").applyInPandas(gather, CHUNK_SCHEMA))
-    return Cube(out_df, out_view, out_bands, gout)
+    pinned = pin_group_partitions(keyed, "skey", g.ncy * g.ncx)
+    return Cube.produce(Producer(pinned, ("skey",), gather), out_view, out_bands, gout)
 
 
 def reduce_space(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] = None) -> Cube:
@@ -221,34 +197,22 @@ def reduce_space(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] 
             T.StructField("state", T.BinaryType(), False),
         ])
 
-        base_df, xf = chunk_stream(cube)  # fuse any pending narrow chain in here
+        def partial(cid, coords, t):
+            nb, nt, ny, nx = t.shape
+            blobs = []
+            for r, bi in zip(rnames, bidx):
+                # reduce over space: stack (ny*nx, nt)
+                v = t[bi].reshape(nt, ny * nx).T  # (cells, nt)
+                st = R.partial_state(r, v)
+                blobs.extend(st[k] for k in R.STATE_KEYS[r])
+            return [dict(ct=coords[0], nt=nt, state=pack_tensor(np.stack(blobs, axis=0)))]  # (nstates, nt)
 
-        def mk_partial(batches: Iterable[pd.DataFrame]):
-            for pdf in batches:
-                rows = []
-                for _, row in pdf.iterrows():
-                    t = xf(tensor_of(row), (int(row["ct"]), int(row["cy"]), int(row["cx"])))
-                    if t is None:
-                        continue
-                    nb, nt, ny, nx = t.shape
-                    blobs = []
-                    for r, bi in zip(rnames, bidx):
-                        # reduce over space: stack (ny*nx, nt)
-                        v = t[bi].reshape(nt, ny * nx).T  # (cells, nt)
-                        st = R.partial_state(r, v)
-                        blobs.extend(st[k] for k in R.STATE_KEYS[r])
-                    state = np.stack(blobs, axis=0)  # (nstates, nt)
-                    rows.append(dict(ct=int(row["ct"]), nt=nt, state=pack_tensor(state)))
-                yield pd.DataFrame(rows, columns=["ct", "nt", "state"]) if rows else \
-                    pd.DataFrame(dict(ct=pd.Series(dtype="int32"), nt=pd.Series(dtype="int32"),
-                                      state=pd.Series(dtype="object")))
-
-        def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def merge_group(key, pdf: pd.DataFrame):
             nt = int(pdf.iloc[0]["nt"])
             nstates = sum(len(R.STATE_KEYS[r]) for r in rnames)
             acc = None
-            for _, row in pdf.iterrows():
-                st = np.frombuffer(row["state"], dtype="<f8").reshape(nstates, nt)
+            for state in pdf["state"]:
+                st = np.frombuffer(state, dtype="<f8").reshape(nstates, nt)
                 if acc is None:
                     acc = st.copy()
                     continue
@@ -267,33 +231,25 @@ def reduce_space(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] 
                 off += len(ks)
             t = np.stack(out, axis=0)[:, :, None, None]  # (nb, nt, 1, 1)
             ict = int(key[0])
-            return pd.DataFrame([dict(chunk_id=gout.chunk_id(ict, 0, 0), ct=ict, cy=0, cx=0,
-                                      nb=t.shape[0], nt=nt, ny=1, nx=1, data=pack_tensor(t))])
+            yield gout.chunk_id(ict, 0, 0), (ict, 0, 0), t
 
-        part = base_df.mapInPandas(mk_partial, part_schema)
-        out_df = part.groupBy("ct").applyInPandas(merge_group, CHUNK_SCHEMA)
-        return Cube(out_df, out_view, out_bands, gout)
+        parts = cube.stream(partial, part_schema)
+        return Cube.produce(Producer(parts, ("ct",), merge_group), out_view, out_bands, gout)
 
     # gather path for exact median: all spatial chunks of a t-slab in one group.
     # Memory bound = one full t-slab, same as the reference's per-thread scan.
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        nt = None
-        chunks = []
-        for _, row in pdf.iterrows():
-            t = tensor_of(row)
-            nt = t.shape[1]
-            chunks.append(t)
+    def gather(key, pdf: pd.DataFrame):
+        chunks = [t for _, _, t in chunk_items(key, pdf)]
+        nt = chunks[0].shape[1]
         outs = []
         for r, bi in zip(rnames, bidx):
             v = np.concatenate([c[bi].reshape(nt, -1) for c in chunks], axis=1).T  # (cells, nt)
             outs.append(R.full_reduce(r, v))
         t = np.stack(outs, axis=0)[:, :, None, None]
         ict = int(key[0])
-        return pd.DataFrame([dict(chunk_id=gout.chunk_id(ict, 0, 0), ct=ict, cy=0, cx=0,
-                                  nb=t.shape[0], nt=nt, ny=1, nx=1, data=pack_tensor(t))])
+        yield gout.chunk_id(ict, 0, 0), (ict, 0, 0), t
 
-    out_df = cube.df.groupBy("ct").applyInPandas(gather, CHUNK_SCHEMA)
-    return Cube(out_df, out_view, out_bands, gout)
+    return Cube.produce(Producer(cube.df, ("ct",), gather), out_view, out_bands, gout)
 
 
 def value_histogram(cube: Cube, bins: int = 32, vmin: float = None,

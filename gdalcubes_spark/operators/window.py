@@ -27,20 +27,26 @@ Spark shapes:
 
 from __future__ import annotations
 
-from typing import Iterable, List, Optional, Sequence
+from typing import List, Optional, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_stream, pack_tensor, pin_group_partitions, tensor_of
+from gdalcubes_spark.cube import Cube, Producer, chunk_items, pack_tensor, pin_group_partitions
 from gdalcubes_spark.operators.reduce import parse_pairs
 
 _WINDOW_REDUCERS = {
     "mean": np.nanmean, "sum": np.nansum, "count": lambda a, axis: np.sum(~np.isnan(a), axis=axis),
     "prod": np.nanprod, "min": np.nanmin, "max": np.nanmax, "median": np.nanmedian,
 }
+
+
+def _pieces(pdf: pd.DataFrame):
+    """The (nb, nt, ny, nx) tensors of a frame of halo pieces."""
+    for nb, nt, ny, nx, data in zip(*(pdf[c].to_numpy() for c in ("nb", "nt", "ny", "nx", "data"))):
+        yield np.frombuffer(data, dtype="<f8").reshape(nb, nt, ny, nx)
 
 
 def _nanreduce_window(name: str, w: np.ndarray) -> np.ndarray:
@@ -103,33 +109,25 @@ def window_time(cube: Cube, window: Sequence[int], reducer=None, kernel=None) ->
         T.StructField("data", T.BinaryType(), False),
     ])
 
-    base_df, _xf = chunk_stream(cube)  # fuse any pending narrow chain in here
-
-    def emit(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                ict, icy, icx = int(row["ct"]), int(row["cy"]), int(row["cx"])
-                t_ = _xf(tensor_of(row), (ict, icy, icx))
-                if t_ is None:
-                    continue
-                (t0, t1), _, _ = g.chunk_cell_range(ict, icy, icx)
-                for kt in range(max(0, (t0 - r) // g.ct), min(g.nct - 1, (t1 - 1 + l) // g.ct) + 1):
-                    (kt0, kt1), _, _ = g.chunk_cell_range(kt, icy, icx)
-                    lo, hi = max(t0, kt0 - l), min(t1, kt1 + r)
-                    if lo >= hi:
-                        continue
-                    piece = t_[:, lo - t0 : hi - t0]
-                    rows.append(dict(tkey=g.chunk_id(kt, icy, icx), off=lo - (kt0 - l),
-                                     nb=piece.shape[0], nt=piece.shape[1], ny=piece.shape[2],
-                                     nx=piece.shape[3], is_core=int(kt == ict),
-                                     data=pack_tensor(piece)))
-            yield pd.DataFrame(rows, columns=[f.name for f in halo_schema.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in halo_schema.fields})
+    def emit(cid, coords, t_):
+        ict, icy, icx = coords
+        (t0, t1), _, _ = g.chunk_cell_range(ict, icy, icx)
+        rows = []
+        for kt in range(max(0, (t0 - r) // g.ct), min(g.nct - 1, (t1 - 1 + l) // g.ct) + 1):
+            (kt0, kt1), _, _ = g.chunk_cell_range(kt, icy, icx)
+            lo, hi = max(t0, kt0 - l), min(t1, kt1 + r)
+            if lo >= hi:
+                continue
+            piece = t_[:, lo - t0 : hi - t0]
+            rows.append(dict(tkey=g.chunk_id(kt, icy, icx), off=lo - (kt0 - l),
+                             nb=piece.shape[0], nt=piece.shape[1], ny=piece.shape[2],
+                             nx=piece.shape[3], is_core=int(kt == ict),
+                             data=pack_tensor(piece)))
+        return rows
 
     nb_in = len(cube.bands)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, pdf: pd.DataFrame):
         cid = int(key[0])
         kt, ky, kx = g.chunk_coords(cid)
         (kt0, kt1), (y0, y1), (x0, x1) = g.chunk_cell_range(kt, ky, kx)
@@ -138,18 +136,14 @@ def window_time(cube: Cube, window: Sequence[int], reducer=None, kernel=None) ->
         # window computed from neighbor halo data (window_time.cpp:160-251);
         # the all-NaN output check below keeps the missing-chunk invariant.
         padded = np.full((nb_in, l + ntc + r, ny, nx), np.nan)
-        for _, row in pdf.iterrows():
-            p = tensor_of(row)
-            padded[:, int(row["off"]) : int(row["off"]) + p.shape[1]] = p
+        for off, p in zip(pdf["off"].to_numpy(), _pieces(pdf)):
+            padded[:, off : off + p.shape[1]] = p
         out = compute(padded, ntc)
-        if np.all(np.isnan(out)):
-            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-        return pd.DataFrame([dict(chunk_id=cid, ct=kt, cy=ky, cx=kx, nb=out.shape[0], nt=ntc,
-                                  ny=ny, nx=nx, data=pack_tensor(out))])
+        if not np.all(np.isnan(out)):
+            yield cid, (kt, ky, kx), out
 
-    df = (pin_group_partitions(base_df.mapInPandas(emit, halo_schema), "tkey", g.n_chunks)
-          .groupBy("tkey").applyInPandas(assemble, CHUNK_SCHEMA))
-    return Cube(df, view, out_bands, g)
+    halos = pin_group_partitions(cube.stream(emit, halo_schema), "tkey", g.n_chunks)
+    return Cube.produce(Producer(halos, ("tkey",), assemble), view, out_bands, g)
 
 
 # ---------------------------------------------------------------------------
@@ -243,37 +237,29 @@ def window_space(cube: Cube, reducer=None, kernel=None, window: Optional[Sequenc
         T.StructField("data", T.BinaryType(), False),
     ])
 
-    base_df, _xf = chunk_stream(cube)  # fuse any pending narrow chain in here
-
-    def emit(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                ict, icy, icx = int(row["ct"]), int(row["cy"]), int(row["cx"])
-                t_ = _xf(tensor_of(row), (ict, icy, icx))
-                if t_ is None:
+    def emit(cid, coords, t_):
+        ict, icy, icx = coords
+        _, (y0, y1), (x0, x1) = g.chunk_cell_range(ict, icy, icx)
+        rows = []
+        for ky in range(max(0, (y0 - hy) // g.cy), min(g.ncy - 1, (y1 - 1 + hy) // g.cy) + 1):
+            for kx in range(max(0, (x0 - hx) // g.cx), min(g.ncx - 1, (x1 - 1 + hx) // g.cx) + 1):
+                _, (ky0, ky1), (kx0, kx1) = g.chunk_cell_range(ict, ky, kx)
+                ylo, yhi = max(y0, ky0 - hy), min(y1, ky1 + hy)
+                xlo, xhi = max(x0, kx0 - hx), min(x1, kx1 + hx)
+                if ylo >= yhi or xlo >= xhi:
                     continue
-                _, (y0, y1), (x0, x1) = g.chunk_cell_range(ict, icy, icx)
-                for ky in range(max(0, (y0 - hy) // g.cy), min(g.ncy - 1, (y1 - 1 + hy) // g.cy) + 1):
-                    for kx in range(max(0, (x0 - hx) // g.cx), min(g.ncx - 1, (x1 - 1 + hx) // g.cx) + 1):
-                        _, (ky0, ky1), (kx0, kx1) = g.chunk_cell_range(ict, ky, kx)
-                        ylo, yhi = max(y0, ky0 - hy), min(y1, ky1 + hy)
-                        xlo, xhi = max(x0, kx0 - hx), min(x1, kx1 + hx)
-                        if ylo >= yhi or xlo >= xhi:
-                            continue
-                        piece = t_[:, :, ylo - y0 : yhi - y0, xlo - x0 : xhi - x0]
-                        rows.append(dict(tkey=g.chunk_id(ict, ky, kx),
-                                         offy=ylo - (ky0 - hy), offx=xlo - (kx0 - hx),
-                                         nb=piece.shape[0], nt=piece.shape[1],
-                                         ny=piece.shape[2], nx=piece.shape[3],
-                                         is_core=int(ky == icy and kx == icx),
-                                         data=pack_tensor(piece)))
-            yield pd.DataFrame(rows, columns=[f.name for f in halo_schema.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in halo_schema.fields})
+                piece = t_[:, :, ylo - y0 : yhi - y0, xlo - x0 : xhi - x0]
+                rows.append(dict(tkey=g.chunk_id(ict, ky, kx),
+                                 offy=ylo - (ky0 - hy), offx=xlo - (kx0 - hx),
+                                 nb=piece.shape[0], nt=piece.shape[1],
+                                 ny=piece.shape[2], nx=piece.shape[3],
+                                 is_core=int(ky == icy and kx == icx),
+                                 data=pack_tensor(piece)))
+        return rows
 
     nb_in = len(cube.bands)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, pdf: pd.DataFrame):
         cid = int(key[0])
         kt, ky, kx = g.chunk_coords(cid)
         (t0, t1), (y0, y1), (x0, x1) = g.chunk_cell_range(kt, ky, kx)
@@ -281,10 +267,8 @@ def window_space(cube: Cube, reducer=None, kernel=None, window: Optional[Sequenc
         # NOTE: no is_core guard — see window_time.assemble; an all-NaN core
         # with live neighbor halos must still produce windowed values.
         padded = np.full((nb_in, ntc, ny + 2 * hy, nx + 2 * hx), np.nan)
-        for _, row in pdf.iterrows():
-            p = tensor_of(row)
-            padded[:, :, int(row["offy"]) : int(row["offy"]) + p.shape[2],
-                   int(row["offx"]) : int(row["offx"]) + p.shape[3]] = p
+        for oy, ox, p in zip(pdf["offy"].to_numpy(), pdf["offx"].to_numpy(), _pieces(pdf)):
+            padded[:, :, oy : oy + p.shape[2], ox : ox + p.shape[3]] = p
         padded = _pad_plane(padded, hy, hx, pad, pad_value,
                             at_top=(y0 == 0), at_bottom=(y1 == g.ny),
                             at_left=(x0 == 0), at_right=(x1 == g.nx))
@@ -295,14 +279,11 @@ def window_space(cube: Cube, reducer=None, kernel=None, window: Optional[Sequenc
         else:
             flat = sw.reshape(sw.shape[:4] + (wy * wx,))
             out = np.stack([_nanreduce_window(n, flat[bi]) for n, bi in zip(rnames, bidx)], axis=0)
-        if np.all(np.isnan(out)):
-            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-        return pd.DataFrame([dict(chunk_id=cid, ct=kt, cy=ky, cx=kx, nb=out.shape[0], nt=ntc,
-                                  ny=ny, nx=nx, data=pack_tensor(out))])
+        if not np.all(np.isnan(out)):
+            yield cid, (kt, ky, kx), out
 
-    df = (pin_group_partitions(base_df.mapInPandas(emit, halo_schema), "tkey", g.n_chunks)
-          .groupBy("tkey").applyInPandas(assemble, CHUNK_SCHEMA))
-    return Cube(df, view, out_bands, g)
+    halos = pin_group_partitions(cube.stream(emit, halo_schema), "tkey", g.n_chunks)
+    return Cube.produce(Producer(halos, ("tkey",), assemble), view, out_bands, g)
 
 
 # ---------------------------------------------------------------------------
@@ -354,28 +335,20 @@ def fill_time(cube: Cube, method: str = "linear") -> Cube:
         return cube.map_chunks(fn)
 
     # gather the full time column per spatial chunk (fill scans arbitrarily far)
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ct")
-        icy, icx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
-        ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
-        nb = int(pdf.iloc[0]["nb"])
-        full = np.full((nb, g.nt, ny, nx), np.nan)
-        for _, row in pdf.iterrows():
-            (t0, t1), _, _ = g.chunk_cell_range(int(row["ct"]), icy, icx)
-            full[:, t0:t1] = tensor_of(row)
+    def gather(key, pdf: pd.DataFrame):
+        full = None
+        for _, (ict, icy, icx), t in chunk_items(key, pdf):
+            if full is None:
+                full = np.full((t.shape[0], g.nt) + t.shape[2:], np.nan)
+            (t0, t1), _, _ = g.chunk_cell_range(ict, icy, icx)
+            full[:, t0:t1] = t
         filled = _fill_series(np.moveaxis(full, 1, 0), method).transpose(1, 0, 2, 3)
-        rows = []
         for kt in range(g.nct):
             (t0, t1), _, _ = g.chunk_cell_range(kt, icy, icx)
             piece = filled[:, t0:t1]
-            if np.all(np.isnan(piece)):
-                continue
-            rows.append(dict(chunk_id=g.chunk_id(kt, icy, icx), ct=kt, cy=icy, cx=icx,
-                             nb=nb, nt=t1 - t0, ny=ny, nx=nx, data=pack_tensor(piece)))
-        return pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields]) if rows else \
-            pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
+            if not np.all(np.isnan(piece)):
+                yield g.chunk_id(kt, icy, icx), (kt, icy, icx), piece
 
     keyed = cube.df.withColumn("skey", F.col("cy").cast("long") * g.ncx + F.col("cx"))
-    df = (pin_group_partitions(keyed, "skey", g.ncy * g.ncx)
-          .groupBy("skey").applyInPandas(gather, CHUNK_SCHEMA))
-    return Cube(df, view, list(cube.bands), g)
+    pinned = pin_group_partitions(keyed, "skey", g.ncy * g.ncx)
+    return Cube.produce(Producer(pinned, ("skey",), gather), view, cube.bands, g)

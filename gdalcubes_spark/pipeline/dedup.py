@@ -274,13 +274,6 @@ def hash_near_pairs(sig: DataFrame, id_col: str, hash_col: str, max_hamming: int
             .select("ida", "idb", "hamming"))
 
 
-def phash_near_pairs(images: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Image near-dup via the inventory's phash column (input_hint) — the
-    visual-dedup pass of a training-data pipeline, no decode needed."""
-    return hash_near_pairs(images.select(F.col("image_id").alias("id"), "phash"),
-                           "id", "phash", max_hamming)
-
-
 def simhash_near_pairs(df: DataFrame, max_hamming: int = 3, id_col: str = "doc_id",
                        text_col: str = "text", hash_fn: str = "xxhash64") -> DataFrame:
     """Near-dup text pairs by SimHash over banded Hamming buckets."""

@@ -29,7 +29,7 @@ expressions so the join side never runs Python.
 
 from __future__ import annotations
 
-from typing import Iterable, List, Optional
+from typing import List, Optional
 
 import numpy as np
 import pandas as pd
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gdalcubes_spark import codecs
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, pack_tensor, pin_group_partitions
+from gdalcubes_spark.cube import Cube, Producer, pack_tensor, pin_group_partitions
 from gdalcubes_spark.sources import resample as RS
 from gdalcubes_spark.grid import ChunkGrid, CubeView, Unit, default_chunking
 from gdalcubes_spark.srs import Transformer, parse_epsg
@@ -374,8 +374,7 @@ class _AggState:
                     lo = (cnt[has] - 1) // 2
                     hi = cnt[has] // 2
                     cols = np.nonzero(has)[0]
-                    med = (flat[lo, cols] + flat[hi, cols]) / 2.0
-                    self.acc[:, lt].reshape(nb * plane)[cols] = med
+                    self._put(lt, cols, (flat[lo, cols] + flat[hi, cols]) / 2.0)
                     continue
                 # sparse fallback (huge K × cells): gather only real samples
                 # as (cell_id, value) pairs, one lexsort, segmented median —
@@ -398,31 +397,16 @@ class _AggState:
                 counts = np.diff(np.append(starts, len(idx)))
                 lo = starts + (counts - 1) // 2
                 hi = starts + counts // 2
-                med = (val[lo] + val[hi]) / 2.0
-                self.acc[:, lt].reshape(nb * plane)[idx[starts]] = med
+                self._put(lt, idx[starts], (val[lo] + val[hi]) / 2.0)
         return self.acc
 
-
-def _attach_scan_fusion(cube: Cube, make_df, chain: tuple) -> None:
-    """Wire Cube.map_chunks' scan-fusion hook onto a scan-produced cube.
-
-    make_df(chain) wraps the ALREADY-ANALYZED pre-groupBy DataFrame with a
-    build/merge UDF applying `chain` in-UDF — reusing the analyzed subtree
-    keeps each fused rebuild to one cheap applyInPandas wrap (a from-scratch
-    raster_cube rebuild cost ~0.3-0.6 s of driver-side analysis per narrow
-    op, eating the executor-side win). The bare-scan stream base is a THUNK:
-    only chunk_stream consumers (reduce partials, aggregate cut, window
-    emits) pay for building it, and they get the chain fused into their own
-    UDF with no packed intermediate; direct cube.df consumers get the
-    in-build fusion."""
-    def hook(fn, fview, fbands, fchunking):
-        new_chain = chain + (fn,)
-        fused = Cube(make_df(new_chain), fview, list(fbands), fchunking)
-        fused._fuse_chain = new_chain
-        fused._fuse_base_thunk = lambda: make_df(())
-        _attach_scan_fusion(fused, make_df, new_chain)
-        return fused
-    cube._fuse_into_scan = hook
+    def _put(self, lt: int, cells: np.ndarray, vals: np.ndarray) -> None:
+        """acc[:, lt] at flat (band, y, x) cell indices. acc[:, lt] is a
+        strided view whenever nt > 1, so a reshape of it would be a copy and
+        the write would be lost."""
+        nb, _, ny, nx = self.acc.shape
+        b, y, x = np.unravel_index(cells, (nb, ny, nx))
+        self.acc[b, lt, y, x] = vals
 
 
 def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
@@ -445,9 +429,9 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
     a full-res warp at the last ulp — enable when the view is much coarser
     than the sources and the decode dominates (the usual 100 TB case).
 
-    The returned cube carries the scan-fusion hook (_attach_scan_fusion):
-    narrow ops chained onto it run inside the build/merge UDF after
-    aggregation — zero extra Arrow round trips (see Cube.map_chunks)."""
+    The build (or salted merge) UDF is the cube's producer: narrow ops
+    chained onto it and the next wide op's map-side step run inside it,
+    after aggregation — zero extra Arrow round trips (see cube.py)."""
     g = chunking or default_chunking(view)
     view_epsg = parse_epsg(view.srs)
     full_bands = list(bands)
@@ -494,80 +478,61 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
 
     vleft, vtop = view.left, view.top
 
-    def mk_build(chain: tuple):
-        def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            cid = int(key[0])
-            kt, ky, kx = g.chunk_coords(cid)
-            (t0c, t1c), (yy0, yy1), (xx0, xx1) = g.chunk_cell_range(kt, ky, kx)
-            nyc, nxc = yy1 - yy0, xx1 - xx0
-            xs = vleft + (np.arange(xx0, xx1) + 0.5) * dx
-            ys = vtop - (np.arange(yy0, yy1) + 0.5) * dy
-            st = _AggState(agg, (nb, t1c - t0c, nyc, nxc))
-            pdf = pdf.sort_values("image_id")
-            c = {k: pdf[k].to_numpy() for k in ("it", "bytes", "fmt", "nleft", "nright", "nbottom",
-                                                "ntop", "epsg", "vleft", "vright", "vbottom", "vtop")}
-            for i in range(len(pdf)):  # plain array indexing — iterrows is ~10× slower
-                lt = int(c["it"][i]) - t0c
-                if not (0 <= lt < t1c - t0c):
-                    continue
-                res = _sample_image(c["bytes"][i], c["fmt"][i],
-                                    (c["nleft"][i], c["nright"][i], c["nbottom"][i], c["ntop"][i]),
-                                    int(c["epsg"][i]), xs, ys, view_epsg, resampling, nb_payload,
-                                    (c["vleft"][i], c["vright"][i], c["vbottom"][i], c["vtop"][i]),
-                                    band_idx, dxv=dx, dyv=dy, use_overviews=use_overviews)
-                if res is None:
-                    continue
-                vals, oy, ox = res
-                if mask is not None:
-                    bad = mask.apply(vals[mask_idx])
-                    vals = np.where(bad[None, ...], np.nan, vals)
-                st.update(vals, lt, oy, ox)
-            t = st.finalize()
-            if out_idx is not None and len(out_idx) != t.shape[0]:
-                t = t[out_idx]  # drop the mask-only band from the output
-            if np.all(np.isnan(t)):
-                return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-            for f in chain:  # fused narrow chain (map_chunks elision contract)
-                t = f(t, (kt, ky, kx))
-                if t is None or (isinstance(t, np.ndarray) and np.all(np.isnan(t))):
-                    return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-            return pd.DataFrame([dict(chunk_id=cid, ct=kt, cy=ky, cx=kx, nb=t.shape[0], nt=t.shape[1],
-                                      ny=t.shape[2], nx=t.shape[3], data=pack_tensor(t))])
-        return build
+    def build(key, pdf: pd.DataFrame):
+        cid = int(key[0])
+        kt, ky, kx = g.chunk_coords(cid)
+        (t0c, t1c), (yy0, yy1), (xx0, xx1) = g.chunk_cell_range(kt, ky, kx)
+        nyc, nxc = yy1 - yy0, xx1 - xx0
+        xs = vleft + (np.arange(xx0, xx1) + 0.5) * dx
+        ys = vtop - (np.arange(yy0, yy1) + 0.5) * dy
+        st = _AggState(agg, (nb, t1c - t0c, nyc, nxc))
+        pdf = pdf.sort_values("image_id")
+        c = {k: pdf[k].to_numpy() for k in ("it", "bytes", "fmt", "nleft", "nright", "nbottom",
+                                            "ntop", "epsg", "vleft", "vright", "vbottom", "vtop")}
+        for i in range(len(pdf)):  # plain array indexing — iterrows is ~10× slower
+            lt = int(c["it"][i]) - t0c
+            if not (0 <= lt < t1c - t0c):
+                continue
+            res = _sample_image(c["bytes"][i], c["fmt"][i],
+                                (c["nleft"][i], c["nright"][i], c["nbottom"][i], c["ntop"][i]),
+                                int(c["epsg"][i]), xs, ys, view_epsg, resampling, nb_payload,
+                                (c["vleft"][i], c["vright"][i], c["vbottom"][i], c["vtop"][i]),
+                                band_idx, dxv=dx, dyv=dy, use_overviews=use_overviews)
+            if res is None:
+                continue
+            vals, oy, ox = res
+            if mask is not None:
+                bad = mask.apply(vals[mask_idx])
+                vals = np.where(bad[None, ...], np.nan, vals)
+            st.update(vals, lt, oy, ox)
+        t = st.finalize()
+        if out_idx is not None and len(out_idx) != t.shape[0]:
+            t = t[out_idx]  # drop the mask-only band from the output
+        if not np.all(np.isnan(t)):
+            yield cid, (kt, ky, kx), t
 
     out_bands = list(band_sel) if band_sel is not None else list(bands)
     if salt > 0 and agg in DECOMPOSABLE:
-        cube, make_df = _salted_scan(exploded, view, out_bands, g, mask, salt,
-                                     build_ctx=(vleft, vtop, dx, dy, view_epsg, resampling, nb, agg,
-                                                mask_idx, nb_payload, band_idx, out_idx,
-                                                use_overviews))
+        producer = _salted_scan(exploded, g, mask, salt,
+                                build_ctx=(vleft, vtop, dx, dy, view_epsg, resampling, nb, agg,
+                                           mask_idx, nb_payload, band_idx, out_idx, use_overviews))
     else:
-        # Pin the decode shuffle's task count: AQE coalesces by POST-SHUFFLE
-        # BYTES, but this stage's rows are compressed image refs whose decode/
-        # warp cost is orders of magnitude larger per byte than columnar work —
-        # byte-based coalescing was observed collapsing 32 cores' worth of
-        # decode into 5 tasks. An explicit repartition(n, chunk_id) satisfies
-        # the groupBy's clustering (no second exchange) and AQE leaves
-        # user-numbered repartitions alone. n = 4x parallelism oversubscription
-        # (scheduler slack for per-chunk cost variance), capped by chunk count.
-        pinned = pin_group_partitions(exploded, "chunk_id", g.n_chunks)
-
-        def make_df(chain: tuple):
-            return pinned.groupBy("chunk_id").applyInPandas(mk_build(chain), CHUNK_SCHEMA)
-
-        cube = Cube(make_df(()), view, out_bands, g)
+        # decode/warp cost per image-ref byte is far above columnar work: pin
+        # the build to one wave of tasks (see pin_group_partitions)
+        producer = Producer(pin_group_partitions(exploded, "chunk_id", g.n_chunks), ("chunk_id",), build)
+    cube = Cube.produce(producer, view, out_bands, g)
     # select_bands pushdown hook: rebuilding the scan with fewer bands
     cube._scan_rebuild = lambda names: raster_cube(images, view, full_bands, chunking=g,
                                                    mask=mask, salt=salt, band_sel=list(names))
-    _attach_scan_fusion(cube, make_df, ())
     return cube
 
 
-def _salted_scan(exploded: DataFrame, view: CubeView, bands: List[str], g: ChunkGrid,
-                 mask: Optional[ImageMask], salt: int, build_ctx):
+def _salted_scan(exploded: DataFrame, g: ChunkGrid, mask: Optional[ImageMask], salt: int,
+                 build_ctx) -> Producer:
     """Two-phase skew-proof scan: partial aggregation per (chunk_id, salt
-    bucket of image_id), then merge per chunk_id. Bounds any single task to
-    ~|images_in_chunk|/salt decodes (north-rule skew handling)."""
+    bucket of image_id), then merge per chunk_id, the returned producer.
+    Bounds any single task to ~|images_in_chunk|/salt decodes (north-rule
+    skew handling)."""
     (vleft, vtop, dx, dy, view_epsg, resampling, nb, agg, mask_idx,
      nb_payload, band_idx, out_idx, use_overviews) = build_ctx
 
@@ -635,63 +600,52 @@ def _salted_scan(exploded: DataFrame, view: CubeView, bands: List[str], g: Chunk
             aux = pack_tensor(ordarr)
         return pd.DataFrame([dict(chunk_id=cid, state=pack_tensor(st.acc), aux=aux)])
 
-    def mk_merge(chain: tuple):
-        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            cid = int(key[0])
-            kt, ky, kx = g.chunk_coords(cid)
-            (t0c, t1c), (yy0, yy1), (xx0, xx1) = g.chunk_cell_range(kt, ky, kx)
-            shape = (nb, t1c - t0c, yy1 - yy0, xx1 - xx0)
-            acc = np.full(shape, np.nan)
-            cnt = np.zeros(shape) if agg == "mean" else None
-            acc_ord = np.full(shape, np.nan) if agg in ("first", "last") else None
-            for _, row in pdf.iterrows():
-                s = np.frombuffer(row["state"], dtype="<f8").reshape(shape)
-                ok = ~np.isnan(s)
-                if agg == "min":
-                    acc = np.fmin(acc, s)
-                elif agg == "max":
-                    acc = np.fmax(acc, s)
-                elif agg in ("sum", "count_images", "count_values"):
-                    first = ok & np.isnan(acc)
-                    acc[first] = 0.0
-                    acc[ok] += s[ok]
-                elif agg == "mean":
-                    c = np.frombuffer(row["aux"], dtype="<f8").reshape(shape)
-                    first = ok & np.isnan(acc)
-                    acc[first] = 0.0
-                    acc[ok] += s[ok]
-                    cnt += c
-                elif agg in ("first", "last"):
-                    o = np.frombuffer(row["aux"], dtype="<f8").reshape(shape)
-                    if agg == "first":
-                        take = ok & (np.isnan(acc_ord) | (o < acc_ord))
-                    else:
-                        take = ok & (np.isnan(acc_ord) | (o > acc_ord))
-                    acc[take] = s[take]
-                    acc_ord[take] = o[take]
-            if agg == "mean":
-                with np.errstate(invalid="ignore"):
-                    acc = acc / np.maximum(cnt, 1)
-            if out_idx is not None and len(out_idx) != acc.shape[0]:
-                acc = acc[out_idx]
-            if np.all(np.isnan(acc)):
-                return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-            for f in chain:  # fused narrow chain (map_chunks elision contract)
-                acc = f(acc, (kt, ky, kx))
-                if acc is None or (isinstance(acc, np.ndarray) and np.all(np.isnan(acc))):
-                    return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-            return pd.DataFrame([dict(chunk_id=cid, ct=kt, cy=ky, cx=kx, nb=acc.shape[0], nt=acc.shape[1],
-                                      ny=acc.shape[2], nx=acc.shape[3], data=pack_tensor(acc))])
-        return merge
+    def merge(key, pdf: pd.DataFrame):
+        cid = int(key[0])
+        kt, ky, kx = g.chunk_coords(cid)
+        (t0c, t1c), (yy0, yy1), (xx0, xx1) = g.chunk_cell_range(kt, ky, kx)
+        shape = (nb, t1c - t0c, yy1 - yy0, xx1 - xx0)
+        acc = np.full(shape, np.nan)
+        cnt = np.zeros(shape) if agg == "mean" else None
+        acc_ord = np.full(shape, np.nan) if agg in ("first", "last") else None
+        for state, aux in zip(pdf["state"], pdf["aux"]):
+            s = np.frombuffer(state, dtype="<f8").reshape(shape)
+            ok = ~np.isnan(s)
+            if agg == "min":
+                acc = np.fmin(acc, s)
+            elif agg == "max":
+                acc = np.fmax(acc, s)
+            elif agg in ("sum", "count_images", "count_values"):
+                first = ok & np.isnan(acc)
+                acc[first] = 0.0
+                acc[ok] += s[ok]
+            elif agg == "mean":
+                c = np.frombuffer(aux, dtype="<f8").reshape(shape)
+                first = ok & np.isnan(acc)
+                acc[first] = 0.0
+                acc[ok] += s[ok]
+                cnt += c
+            elif agg in ("first", "last"):
+                o = np.frombuffer(aux, dtype="<f8").reshape(shape)
+                if agg == "first":
+                    take = ok & (np.isnan(acc_ord) | (o < acc_ord))
+                else:
+                    take = ok & (np.isnan(acc_ord) | (o > acc_ord))
+                acc[take] = s[take]
+                acc_ord[take] = o[take]
+        if agg == "mean":
+            with np.errstate(invalid="ignore"):
+                acc = acc / np.maximum(cnt, 1)
+        if out_idx is not None and len(out_idx) != acc.shape[0]:
+            acc = acc[out_idx]
+        if not np.all(np.isnan(acc)):
+            yield cid, (kt, ky, kx), acc
 
     salted = exploded.withColumn("_salt", F.pmod(F.xxhash64("image_id"), F.lit(salt)))
     part = (pin_group_partitions(salted, ["chunk_id", "_salt"], g.n_chunks * salt)
             .groupBy("chunk_id", "_salt").applyInPandas(partial, part_schema))
 
-    def make_df(chain: tuple):
-        return part.groupBy("chunk_id").applyInPandas(mk_merge(chain), CHUNK_SCHEMA)
-
-    return Cube(make_df(()), view, list(bands), g), make_df
+    return Producer(part, ("chunk_id",), merge)
 
 
 def inventory_partition_columns(images: DataFrame, time_bucket: str = "month",

@@ -24,7 +24,11 @@ transcribed from the RFC text (section numbers cited inline).
 from __future__ import annotations
 
 import numpy as np
-from numpy.core.umath import clip as _uclip
+
+try:  # the bare ufunc: np.clip's dispatch costs more than a 4x4 clamp
+    from numpy.core.umath import clip as _uclip
+except ImportError:  # numpy.core is private and NumPy 2 drops it
+    _uclip = np.clip
 
 from gdalcubes_spark.vp8tables import (
     AC_QLOOKUP,
@@ -867,13 +871,6 @@ def _add_block(W, r, c, blk):
             k += 1
 
 
-def _add_block_np(plane, py, px, blk):
-    """Residual add + clamp for one 4x4 into a padded numpy plane."""
-    b = np.asarray(blk, np.int32).reshape(4, 4)
-    reg = plane[py:py + 4, px:px + 4].astype(np.int32) + b
-    plane[py:py + 4, px:px + 4] = _uclip(reg, 0, 255).astype(np.uint8)
-
-
 # ---------------------------------------------------------------- filter
 
 
@@ -1211,7 +1208,3 @@ def yuv_to_rgb(y: np.ndarray, u: np.ndarray, v: np.ndarray) -> np.ndarray:
         out[i] = _uclip(c >> 6, 0, 255).astype(np.uint8)
     return out
 
-
-def decode_vp8_rgb(data: bytes) -> np.ndarray:
-    """VP8 key-frame payload → (3, h, w) uint8 RGB planes."""
-    return yuv_to_rgb(*decode_vp8_yuv(data))

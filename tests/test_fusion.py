@@ -11,7 +11,11 @@ arbitrarily long narrow chain — and (b) value equality with the unfused
 execution (forced by breaking the chain through a shuffle-ish boundary).
 """
 
+import re
+import warnings
+
 import numpy as np
+import pandas as pd
 import pytest
 
 from gdalcubes_spark.cube import Cube, dummy_cube
@@ -97,3 +101,94 @@ class TestFusion:
         assert r.df.count() == 0  # chunks elided before the second fn
         a = r.collect_array()
         assert np.all(np.isnan(a))
+
+
+def _python_nodes(df):
+    plan = df._jdf.queryExecution().sparkPlan().toString()
+    return sum(plan.count(n) for n in ("FlatMapGroupsInPandas", "MapInPandas", "ArrowEvalPython"))
+
+
+class TestProducerFusion:
+    """Grouped producers (from_cells, fill gather, window assemble,
+    aggregate merge, reduce merge) run the next wide op's map-side step in
+    their own UDF, and pinned grouped stages get one wave of tasks."""
+
+    @staticmethod
+    def _repartition_counts(df):
+        """Partition counts of the plan's user-numbered repartitions."""
+        plan = df._jdf.queryExecution().sparkPlan().toString()
+        return [1 if m.group(1) else int(m.group(2)) for m in re.finditer(
+            r"Exchange (?:(SinglePartition)|hashpartitioning\(.*?, (\d+)\)), REPARTITION_BY_NUM", plan)]
+
+    def test_grouped_stage_is_one_wave(self, spark):
+        from gdalcubes_spark.cube import pin_group_partitions
+
+        par = spark.sparkContext.defaultParallelism
+        df = spark.range(0, 1000).withColumnRenamed("id", "chunk_id")
+        for groups in (1, max(1, par - 1), par, 4 * par + 3):
+            got = self._repartition_counts(pin_group_partitions(df, "chunk_id", groups))
+            assert got == [min(groups, par)], groups
+        # the same rule inside an operator: window_space's assemble stage
+        v = _view()
+        g = ChunkGrid(nt=v.nt, ny=v.ny, nx=v.nx, ct=1, cy=2, cx=2)  # 64 chunks
+        w = dummy_cube(spark, v, band_names=["b"], chunking=g).window_space(reducer="mean(b)", window=(3, 3))
+        assert self._repartition_counts(w.df) == [min(g.n_chunks, par)]
+
+    def test_chain_pipeline_five_python_nodes(self, spark):
+        nt, ny, nx = 16, 10, 12
+        rng = np.random.default_rng(3)
+        vals = np.where(rng.random((nt, ny, nx)) < 0.35, np.nan, rng.random((nt, ny, nx)) * 10)
+        vals[:, 0, 0] = np.nan  # one all-NaN pixel column
+        it, iy, ix = np.nonzero(~np.isnan(vals))
+        cells = spark.createDataFrame(pd.DataFrame(dict(
+            it=it.astype("int32"), iy=iy.astype("int32"), ix=ix.astype("int32"),
+            band="v", value=vals[it, iy, ix])))
+        v = CubeView.create(srs="EPSG:4326", left=0, right=nx, bottom=0, top=ny,
+                            t0="2021-01-01", t1="2021-01-16", dt="P1D", dx=1.0, dy=1.0)
+        g = ChunkGrid(nt=nt, ny=ny, nx=nx, ct=2, cy=5, cx=6)
+        r = (Cube.from_cells(cells, v, ["v"], g)
+             .fill_time("locf")
+             .window_space(reducer="mean(v)", window=(3, 3))
+             .aggregate_time(fact=4, method="mean")
+             .reduce_time("mean(v_mean)", "max(v_mean)"))
+        out = r.cells()
+        # from_cells | gather + halo emit | assemble + cut | merge + partial |
+        # reduce merge + explode
+        assert _python_nodes(out) == 5
+
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)  # all-NaN windows
+            f = vals.copy()
+            for t in range(1, nt):  # locf
+                f[t] = np.where(np.isnan(f[t]), f[t - 1], f[t])
+            pad = np.full((nt, ny + 2, nx + 2), np.nan)
+            pad[:, 1:-1, 1:-1] = f
+            win = np.stack([pad[:, dy:dy + ny, dx:dx + nx] for dy in range(3) for dx in range(3)])
+            w = np.nanmean(win, axis=0)
+            a = np.nanmean(w.reshape(nt // 4, 4, ny, nx), axis=1)
+            want = np.stack([np.nanmean(a, axis=0), np.nanmax(a, axis=0)])
+        got = np.full((2, ny, nx), np.nan)
+        b2i = {b: k for k, b in enumerate(r.bands)}
+        for row in out.collect():
+            assert row["it"] == 0
+            got[b2i[row["band"]], row["iy"], row["ix"]] = row["value"]
+        assert np.array_equal(np.isnan(got), np.isnan(want))
+        assert np.isnan(want).sum() < want.size
+        assert np.allclose(got, want, rtol=1e-12, atol=0, equal_nan=True)
+
+    def test_cached_producer_output_is_reused(self, spark):
+        """A consumer of a cube whose df is cached reads the cache instead
+        of re-running the producer with its step fused in."""
+        v = _view()
+        g = ChunkGrid(nt=v.nt, ny=v.ny, nx=v.nx, ct=1, cy=4, cx=4)
+        c = dummy_cube(spark, v, band_names=["b"], fill=3.0, chunking=g).window_time((1, 0), reducer="sum(b)")
+        fused = c.cells()
+        c.df.cache()
+        try:
+            cached = c.cells()
+            plan = cached._jdf.queryExecution().executedPlan().toString()
+            assert "InMemoryTableScan" in plan
+            assert "InMemoryTableScan" not in fused._jdf.queryExecution().executedPlan().toString()
+            assert sorted(cached.collect()) == sorted(fused.collect())
+        finally:
+            c.df.unpersist()

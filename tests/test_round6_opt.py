@@ -41,7 +41,9 @@ def _pair_sort_reference(items, shape):
         lo = starts + (counts - 1) // 2
         hi = starts + counts // 2
         med = (val[lo] + val[hi]) / 2.0
-        acc[:, lt].reshape(nb * plane)[idx[starts]] = med
+        # acc[:, lt] is strided when nt > 1: write through unflattened indices
+        b, y, x = np.unravel_index(idx[starts], (nb, ny, nx))
+        acc[b, lt, y, x] = med
     return acc
 
 
@@ -73,24 +75,35 @@ def test_median_finalize_dense_equals_pair_sort(k, nan_frac):
     ref = _pair_sort_reference(ref_items, (nb, nt, ny, nx))
     assert np.array_equal(dense.view(np.uint64), ref.view(np.uint64)), \
         "dense median finalize diverged from the pair-sort reference"
+    # non-vacuous: every cell some image covered with a value has a median
+    covered = np.zeros((nb, nt, ny, nx), dtype=bool)
+    for lt, its in ref_items.items():
+        for v, y, x in its:
+            covered[:, lt, y:y + v.shape[1], x:x + v.shape[2]] |= ~np.isnan(v)
+    assert np.array_equal(~np.isnan(dense), covered)
+    if nan_frac < 1.0:
+        assert covered.any()
 
 
 def test_median_finalize_sparse_fallback_identical():
     """Force the sparse fallback (budget=0) and compare against dense."""
     rng = np.random.default_rng(7)
-    nb, nt, ny, nx = 1, 1, 9, 9
-    items = _random_items(rng, nb, ny, nx, 11, 0.2)
+    for nb, nt in ((1, 1), (2, 3)):
+        ny = nx = 9
+        items = [_random_items(rng, nb, ny, nx, 11, 0.2) for _ in range(nt)]
 
-    def run(budget):
-        st = _AggState("median", (nb, nt, ny, nx))
-        st._MEDIAN_DENSE_BYTES = budget
-        for v, y, x in items:
-            st.update(v.copy(), 0, y, x)
-        return st.finalize()
+        def run(budget):
+            st = _AggState("median", (nb, nt, ny, nx))
+            st._MEDIAN_DENSE_BYTES = budget
+            for lt in range(nt):
+                for v, y, x in items[lt]:
+                    st.update(v.copy(), lt, y, x)
+            return st.finalize()
 
-    dense = run(1 << 40)
-    sparse = run(0)
-    assert np.array_equal(dense.view(np.uint64), sparse.view(np.uint64))
+        dense = run(1 << 40)
+        sparse = run(0)
+        assert np.array_equal(dense.view(np.uint64), sparse.view(np.uint64))
+        assert not np.isnan(dense).all()
 
 
 def test_reduce_median_sort_gather_equals_nanmedian():
@@ -150,6 +163,18 @@ def test_jpeg_roundtrip_stable():
                 assert err < 16.0  # sanity: quality 90 on noise, no subsampling
 
 
+def _unfused(cube):
+    """The same cube without its producer: narrow ops and map-side steps on
+    it run in their own mapInPandas over the packed chunk rows."""
+    from gdalcubes_spark.cube import Cube
+    return Cube(cube.df, cube.view, cube.bands, cube.chunking)
+
+
+def _py_nodes(df):
+    plan = df._jdf.queryExecution().sparkPlan().toString()
+    return sum(plan.count(n) for n in ("FlatMapGroupsInPandas", "MapInPandas", "ArrowEvalPython"))
+
+
 def test_scan_fusion_matches_unfused(spark):
     from gdalcubes_spark.grid import ChunkGrid, CubeView
     from gdalcubes_spark.sources.raster_cube import raster_cube
@@ -166,10 +191,12 @@ def test_scan_fusion_matches_unfused(spark):
     g = ChunkGrid(nt=v.nt, ny=v.ny, nx=v.nx, ct=1, cy=16, cx=16)
     cube = raster_cube(imgs, v, band_names(lay), chunking=g)
     fused = cube.apply_pixel("(b02 - b01) / (b02 + b01 + 1)", ["ndvi"])
-    # the fusion hook must have fired: no extra ArrowEval node in the plan
-    assert getattr(fused, "_fuse_into_scan", None) is not None
+    unfused = _unfused(cube).apply_pixel("(b02 - b01) / (b02 + b01 + 1)", ["ndvi"])
+    # the apply runs inside the scan build: no Python node of its own
+    assert _py_nodes(unfused.df) - _py_nodes(fused.df) == 1
     arr_f = fused.collect_array()
-    base = raster_cube(imgs, v, band_names(lay), chunking=g).collect_array()
+    assert np.array_equal(arr_f, unfused.collect_array(), equal_nan=True)
+    base = cube.collect_array()
     ref = (base[1] - base[0]) / (base[1] + base[0] + 1)
     assert np.array_equal(arr_f[0], ref, equal_nan=True)
     # salted scan: the fused chain after merge equals the unfused map_chunks
@@ -179,17 +206,16 @@ def test_scan_fusion_matches_unfused(spark):
     v2.aggregation = "mean"
     sc1 = raster_cube(imgs, v2, band_names(lay), chunking=g, salt=2)
     salted_fused = sc1.apply_pixel("b01 + b02", ["s"]).collect_array()
-    sc2 = raster_cube(imgs, v2, band_names(lay), chunking=g, salt=2)
-    del sc2._fuse_into_scan  # force the plain mapInPandas path
+    sc2 = _unfused(raster_cube(imgs, v2, band_names(lay), chunking=g, salt=2))
     salted_unfused = sc2.apply_pixel("b01 + b02", ["s"]).collect_array()
     assert np.array_equal(salted_fused, salted_unfused, equal_nan=True)
 
 
 def test_scan_fusion_stream_thunk_routes(spark):
     """Both consumer routes of a scan-fused narrow chain must match the
-    unfused computation: the combinable reduce (chunk_stream -> lazy
-    bare-scan thunk, chain applied in the consumer's UDF) and the gather
-    median (direct cube.df, chain applied inside the scan build)."""
+    unfused computation: the combinable reduce (chain and reduce partial both
+    run in the scan build, Cube.stream) and the gather median (cube.df, chain
+    applied inside the scan build)."""
     from gdalcubes_spark.grid import ChunkGrid, CubeView
     from gdalcubes_spark.sources.raster_cube import raster_cube
     from gdalcubes_spark.synth import ImageLayout, band_names, generate_images
@@ -205,15 +231,15 @@ def test_scan_fusion_stream_thunk_routes(spark):
     g = ChunkGrid(nt=v.nt, ny=v.ny, nx=v.nx, ct=1, cy=16, cx=16)
     fused = raster_cube(imgs, v, band_names(lay), chunking=g) \
         .apply_pixel("b01 * 2 + b02", ["s"])
-    ref_cube = raster_cube(imgs, v, band_names(lay), chunking=g)
-    del ref_cube._fuse_into_scan  # force the plain map_chunks path
-    ref = ref_cube.apply_pixel("b01 * 2 + b02", ["s"])
-    got_c = fused.reduce_time("mean(s)", "max(s)").collect_array()
-    ref_c = ref.reduce_time("mean(s)", "max(s)").collect_array()
-    assert np.array_equal(got_c, ref_c, equal_nan=True)
-    got_m = fused.reduce_time("median(s)", names=["m"]).collect_array()
-    ref_m = ref.reduce_time("median(s)", names=["m"]).collect_array()
-    assert np.array_equal(got_m, ref_m, equal_nan=True)
+    ref = _unfused(raster_cube(imgs, v, band_names(lay), chunking=g)) \
+        .apply_pixel("b01 * 2 + b02", ["s"])
+    got_c, ref_c = (c.reduce_time("mean(s)", "max(s)") for c in (fused, ref))
+    # build + apply + partial in one UDF; unfused adds a mapInPandas
+    assert _py_nodes(ref_c.df) - _py_nodes(got_c.df) == 1
+    assert np.array_equal(got_c.collect_array(), ref_c.collect_array(), equal_nan=True)
+    got_m, ref_m = (c.reduce_time("median(s)", names=["m"]) for c in (fused, ref))
+    assert _py_nodes(ref_m.df) - _py_nodes(got_m.df) == 1
+    assert np.array_equal(got_m.collect_array(), ref_m.collect_array(), equal_nan=True)
 
 
 def test_cc_input_fixpoint_early_stop(spark):

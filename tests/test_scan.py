@@ -181,6 +181,24 @@ class TestRasterCube:
         want = oracle_cell_values(lay, n, v, "median")
         assert np.allclose(np.nan_to_num(got, nan=-1), np.nan_to_num(want, nan=-1))
 
+    def test_median_multiband_multislice_chunks(self, spark):
+        """Median with nb=2 and ct=2: the finalize writes into a (band, t)
+        slice of the accumulator that is strided, not contiguous."""
+        lay = ImageLayout(left0=0.0, top0=4.0, tile_dx=2.0, tile_dy=2.0, gx=2, gy=2,
+                          ntime=2, tile_w=16, tile_h=16, nb=2, fmts=("png", "raw"), overlap=0.25)
+        n = 16
+        imgs = generate_images(spark, n, lay)
+        v = CubeView.create(srs="EPSG:4326", left=0, right=4, bottom=0, top=4,
+                            t0="2021-01-01", t1="2021-01-02", dt="P1D", dx=0.5, dy=0.5,
+                            aggregation="median", resampling="near")
+        c = raster_cube(imgs, v, band_names(lay),
+                        chunking=ChunkGrid(nt=v.nt, ny=v.ny, nx=v.nx, ct=2, cy=4, cx=4))
+        got = c.collect_array()
+        want = oracle_cell_values(lay, n, v, "median")
+        assert not np.isnan(want).all()
+        assert np.array_equal(np.isnan(got), np.isnan(want))
+        assert np.allclose(np.nan_to_num(got, nan=-1), np.nan_to_num(want, nan=-1))
+
     def test_salted_scan_equals_unsalted(self, spark):
         lay = ImageLayout(left0=0.0, top0=4.0, tile_dx=2.0, tile_dy=2.0, gx=2, gy=2,
                           ntime=2, tile_w=8, tile_h=8, nb=1, fmts=("raw",), hot_every=3)

@@ -300,3 +300,29 @@ def test_rejects_non_keyframe_and_garbage():
     payload[3] = 0xAA  # corrupt start code
     with pytest.raises(VP8Error):
         decode_vp8_yuv(bytes(payload))
+
+
+def test_public_clip_fallback_decodes_identically(monkeypatch):
+    """Without numpy.core (NumPy 2 drops the private module) vp8codec falls
+    back to np.clip and decodes every plane bit-identically."""
+    import importlib.util
+    import sys
+
+    import gdalcubes_spark.vp8codec as vp8
+
+    spec = importlib.util.spec_from_file_location("vp8codec_public_clip", vp8.__file__)
+    fallback = importlib.util.module_from_spec(spec)
+    with monkeypatch.context() as m:
+        m.setitem(sys.modules, "numpy.core.umath", None)  # import → ImportError
+        spec.loader.exec_module(fallback)
+    assert fallback._uclip is np.clip
+
+    rng = np.random.default_rng(5)
+    streams = [_payload(libwebp.encode_lossy_rgb(_synth(rng, kind, 40, 56), 60.0))
+               for kind in ("noise", "grad", "blocks")]
+    streams.append(_payload(write_stream(4, 3, dc_plan=checkerboard_dc(12), simple_filter=1)))
+    for s in streams:
+        for got, want in zip(fallback.decode_vp8_yuv(s), decode_vp8_yuv(s)):
+            np.testing.assert_array_equal(got, want)
+        np.testing.assert_array_equal(fallback.yuv_to_rgb(*fallback.decode_vp8_yuv(s)),
+                                      yuv_to_rgb(*decode_vp8_yuv(s)))
