@@ -28,7 +28,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, chunk_rows
+from gdalcubes_spark.cube import CHUNK_COLUMNS, CHUNK_SCHEMA, Cube, chunk_rows
 from gdalcubes_spark.grid import ChunkGrid, CubeView
 
 _METRIC_SCHEMA = T.StructType([
@@ -65,14 +65,13 @@ def _with_metrics(cube: Cube):
     return cube.stream(metrics, combined)
 
 
-def write_checkpoint(cube: Cube, path: str, mode: str = "overwrite") -> None:
-    """Materialize cube + per-partition lineage/metrics (one pass)."""
-    spark = cube.df.sparkSession
+def _write_chunks(cube: Cube, path: str, mode: str) -> None:
+    """Write the cube's chunk rows to {path}/chunks and their metrics to
+    {path}/metrics, computing the chunks once."""
     enriched = _with_metrics(cube)
     enriched.persist()
     try:
-        chunk_cols = [f.name for f in CHUNK_SCHEMA.fields]
-        enriched.select(chunk_cols).write.mode(mode).parquet(f"{path}/chunks")
+        enriched.select(CHUNK_COLUMNS).write.mode(mode).parquet(f"{path}/chunks")
         (enriched.select("chunk_id", "partition_id",
                          (F.col("nb").cast("long") * F.col("nt") * F.col("ny") * F.col("nx")).alias("n_cells"),
                          "n_nan", F.length("data").cast("long").alias("bytes"), "wall_ms",
@@ -80,6 +79,11 @@ def write_checkpoint(cube: Cube, path: str, mode: str = "overwrite") -> None:
          .write.mode(mode).parquet(f"{path}/metrics"))
     finally:
         enriched.unpersist()
+
+
+def write_checkpoint(cube: Cube, path: str, mode: str = "overwrite") -> None:
+    """Materialize cube + per-partition lineage/metrics (one pass)."""
+    _write_chunks(cube, path, mode)
     lineage = dict(view=cube.view.to_json(), bands=cube.bands,
                    chunking=dict(ct=cube.chunking.ct, cy=cube.chunking.cy, cx=cube.chunking.cx),
                    plan="\n".join(cube.df._jdf.queryExecution().simpleString().splitlines()[:50]),
@@ -97,7 +101,7 @@ def read_checkpoint(spark: SparkSession, path: str) -> Cube:
     ck = lin["chunking"]
     g = ChunkGrid(nt=view.nt, ny=view.ny, nx=view.nx, ct=ck["ct"], cy=ck["cy"], cx=ck["cx"])
     df = spark.read.parquet(f"{path}/chunks")
-    return Cube(df.select([f.name for f in CHUNK_SCHEMA.fields]), view, list(lin["bands"]), g)
+    return Cube(df.select(CHUNK_COLUMNS), view, list(lin["bands"]), g)
 
 
 def _fs_exists(spark: SparkSession, path: str) -> bool:
@@ -125,16 +129,5 @@ def resume(cube: Cube, path: str) -> int:
     missing = cube.df.join(done, "chunk_id", "left_anti")
     n = missing.count()
     if n > 0:
-        remaining = Cube(missing, cube.view, cube.bands, cube.chunking)
-        enriched = _with_metrics(remaining)
-        enriched.persist()
-        try:
-            enriched.select([f.name for f in CHUNK_SCHEMA.fields]).write.mode("append").parquet(f"{path}/chunks")
-            (enriched.select("chunk_id", "partition_id",
-                             (F.col("nb").cast("long") * F.col("nt") * F.col("ny") * F.col("nx")).alias("n_cells"),
-                             "n_nan", F.length("data").cast("long").alias("bytes"), "wall_ms",
-                             F.lit(time.time()).alias("written_at"))
-             .write.mode("append").parquet(f"{path}/metrics"))
-        finally:
-            enriched.unpersist()
+        _write_chunks(Cube(missing, cube.view, cube.bands, cube.chunking), path, "append")
     return n

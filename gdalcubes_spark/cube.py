@@ -20,17 +20,23 @@ Scale notes:
 Producers and fusion — one Python round trip per chunk per stage:
 - Every chunk tensor comes out of one Python UDF, the cube's Producer: a
   DataFrame, its group keys and make(key, pdf) → (chunk_id, coords, tensor).
-  The grouped producers are the raster_cube build and salted merge,
-  from_cells, the fill_time gather, the window_time/window_space assemble,
-  the aggregate merge, and the reduce_time/reduce_space merge and gather. A
-  cube without one (dummy, parquet, checkpoint, array sources) streams its
-  own chunk rows through a mapInPandas.
+  Producers: dummy_cube, the packed read_parquet_cube unpack, the
+  raster_cube build and salted merge, from_cells, join_bands, the
+  time-column and space-slab gathers (fill_time, apply_time, reduce_time's
+  exact path, reduce_time_udf, reduce_space's exact path,
+  reduce_space_udf), the window_time/window_space assemble, the regrid
+  assemble (crop, slice_*, select_time), and the aggregate and reduce
+  merges. A cube without one (array, bucketed, unpacked parquet and
+  checkpoint sources) streams its own chunk rows, read by chunk_items.
 - map_chunks appends its fn to the cube's pending narrow chain; the chain
-  runs in the producer's worker, after make and before packing.
-- A wide consumer hands its map-side step (halo emit, aggregate cut, reduce
-  partial, cells() explode, checkpoint metrics) to Cube.stream, which runs it
-  in the same worker on the unpacked tensor. The packed chunk row in between
-  never crosses the Arrow boundary.
+  runs in the producer's worker, after make and before packing. A narrow
+  op that renumbers chunks (a regrid whose output chunks each have one
+  source chunk) composes onto the producer with Producer.then.
+- A wide consumer hands its map-side step (halo emit, regrid and aggregate
+  cut, reduce partial, cells() explode, checkpoint metrics, write_parquet
+  packing) to Cube.stream, which runs it in the same worker on the
+  unpacked tensor. The packed chunk row in between never crosses the
+  Arrow boundary.
 - Cube.df is producer + chain + packed chunk rows; consumers that group
   chunk rows (gathers, joins, sinks) read it. A cached df is read, not
   recomputed.
@@ -38,7 +44,6 @@ Producers and fusion — one Python round trip per chunk per stage:
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 from typing import Callable, Iterable, List, Optional, Sequence
 
@@ -95,13 +100,6 @@ def pin_group_partitions(df: DataFrame, keys, n_groups: int) -> DataFrame:
     return df.repartition(n, *([keys] if isinstance(keys, str) else list(keys)))
 
 
-def tensor_of(row) -> np.ndarray:
-    """Decode a chunk row's payload into an (nb, nt, ny, nx) float64 array."""
-    return np.frombuffer(row["data"], dtype="<f8").reshape(
-        int(row["nb"]), int(row["nt"]), int(row["ny"]), int(row["nx"])
-    )
-
-
 def pack_tensor(a: np.ndarray) -> bytes:
     return np.ascontiguousarray(a, dtype="<f8").tobytes()
 
@@ -109,12 +107,25 @@ def pack_tensor(a: np.ndarray) -> bytes:
 CHUNK_COLUMNS = CHUNK_SCHEMA.fieldNames()
 
 
-def chunk_items(key, pdf: pd.DataFrame):
-    """(chunk_id, (ct, cy, cx), tensor) for each chunk row of a pandas batch,
-    read column-wise. Also the make() of a cube that streams its own rows."""
+def _chunk_payloads(pdf: pd.DataFrame):
+    """(chunk_id, (ct, cy, cx), (nb, nt, ny, nx), payload) per chunk row of a
+    pandas batch, read column-wise."""
     for cid, ct, cy, cx, nb, nt, ny, nx, data in zip(*(pdf[c].to_numpy() for c in CHUNK_COLUMNS)):
-        yield int(cid), (int(ct), int(cy), int(cx)), \
-            np.frombuffer(data, dtype="<f8").reshape(int(nb), int(nt), int(ny), int(nx))
+        yield int(cid), (int(ct), int(cy), int(cx)), (int(nb), int(nt), int(ny), int(nx)), data
+
+
+def chunk_items(key, pdf: pd.DataFrame):
+    """(chunk_id, (ct, cy, cx), tensor) for each chunk row of a pandas batch.
+    Also the make() of a cube that streams its own rows."""
+    for cid, coords, shape, data in _chunk_payloads(pdf):
+        yield cid, coords, np.frombuffer(data, dtype="<f8").reshape(shape)
+
+
+def piece_tensors(pdf: pd.DataFrame):
+    """The (nb, nt, ny, nx) tensors of a frame of map-side pieces (halo and
+    regrid schemas: nb, nt, ny, nx, data columns)."""
+    for nb, nt, ny, nx, data in zip(*(pdf[c].to_numpy() for c in ("nb", "nt", "ny", "nx", "data"))):
+        yield np.frombuffer(data, dtype="<f8").reshape(nb, nt, ny, nx)
 
 
 def chunk_rows(cid: int, coords, t: np.ndarray) -> list:
@@ -122,6 +133,18 @@ def chunk_rows(cid: int, coords, t: np.ndarray) -> list:
     nb, nt, ny, nx = t.shape
     return [dict(chunk_id=cid, ct=coords[0], cy=coords[1], cx=coords[2], nb=nb, nt=nt, ny=ny, nx=nx,
                  data=pack_tensor(t))]
+
+
+def _chained(items, chain: tuple):
+    """items through the narrow `chain`. A chain fn returning None or an
+    all-NaN tensor drops the chunk — the missing chunk ≡ all-NaN invariant."""
+    for cid, coords, t in items:
+        for f in chain:
+            t = f(t, coords)
+            if t is None or np.all(np.isnan(t)):
+                break
+        else:
+            yield cid, coords, t
 
 
 @dataclass(frozen=True)
@@ -134,26 +157,32 @@ class Producer:
     keys: Optional[tuple]
     make: Callable
 
+    def then(self, chain: tuple, fn) -> "Producer":
+        """This producer's chunks through `chain`, then fn(chunk_id, coords,
+        tensor) → output items, all in one make: a narrow op that renumbers
+        chunks fuses like a map_chunks."""
+        make = self.make
+
+        def composed(key, pdf):
+            for item in _chained(make(key, pdf), chain):
+                yield from fn(*item)
+
+        return Producer(self.source, self.keys, composed)
+
     def run(self, chain: tuple, step, schema: T.StructType) -> DataFrame:
         """The one UDF: every made chunk goes through the narrow `chain`, then
         step(chunk_id, coords, tensor) turns it into `schema` rows (a list of
-        row dicts or a pandas frame). A chain fn returning None or an all-NaN
-        tensor drops the chunk — the missing chunk ≡ all-NaN invariant."""
+        row dicts or a pandas frame)."""
         names, make = schema.fieldNames(), self.make
 
-        def frame(items) -> pd.DataFrame:
+        def frame(key, pdf):
             rows, frames = [], []
-            for cid, coords, t in items:
-                for f in chain:
-                    t = f(t, coords)
-                    if t is None or np.all(np.isnan(t)):
-                        break
+            for cid, coords, t in _chained(make(key, pdf), chain):
+                out = step(cid, coords, t)
+                if isinstance(out, pd.DataFrame):
+                    frames.append(out)
                 else:
-                    out = step(cid, coords, t)
-                    if isinstance(out, pd.DataFrame):
-                        frames.append(out)
-                    else:
-                        rows.extend(out)
+                    rows.extend(out)
             if rows:
                 return pd.DataFrame(rows, columns=names)
             return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(columns=names)
@@ -161,11 +190,32 @@ class Producer:
         if self.keys is None:
             def udf(batches: Iterable[pd.DataFrame]):
                 for pdf in batches:
-                    out = frame(make(None, pdf))
+                    out = frame(None, pdf)
                     if len(out):
                         yield out
             return self.source.mapInPandas(udf, schema)
-        return self.source.groupBy(*self.keys).applyInPandas(lambda key, pdf: frame(make(key, pdf)), schema)
+        return self.source.groupBy(*self.keys).applyInPandas(frame, schema)
+
+
+def space_slab(g: ChunkGrid, nb: int, ict: int, items) -> np.ndarray:
+    """The (nb, ntc, ny, nx) slab of time chunk `ict` from its chunk items,
+    NaN where a chunk is missing."""
+    (t0, t1), _, _ = g.chunk_cell_range(ict, 0, 0)
+    slab = np.full((nb, t1 - t0, g.ny, g.nx), np.nan)
+    for _, coords, t in items:
+        _, (y0, y1), (x0, x1) = g.chunk_cell_range(*coords)
+        slab[:, :, y0:y1, x0:x1] = t
+    return slab
+
+
+def split_time(g: ChunkGrid, col: np.ndarray, icy: int, icx: int):
+    """A full (k, nt, ny, nx) time column as its chunks' items; all-NaN
+    chunks are dropped."""
+    for kt in range(g.nct):
+        (t0, t1), _, _ = g.chunk_cell_range(kt, icy, icx)
+        piece = col[:, t0:t1]
+        if not np.all(np.isnan(piece)):
+            yield g.chunk_id(kt, icy, icx), (kt, icy, icx), piece
 
 
 @dataclass
@@ -194,10 +244,6 @@ class Cube:
 
     def band_index(self, name: str) -> int:
         return self.bands.index(name)
-
-    def _derive(self, df: DataFrame, view: Optional[CubeView] = None, bands: Optional[List[str]] = None,
-                chunking: Optional[ChunkGrid] = None) -> "Cube":
-        return Cube(df, view or self.view, list(bands or self.bands), chunking or self.chunking)
 
     # ----------------------------------------------------------- chunk plumbing
     @staticmethod
@@ -246,6 +292,49 @@ class Cube:
         producer, chain = self._pending()
         return Cube.produce(producer, out_view or self.view, list(out_bands or self.bands),
                             out_chunking or self.chunking, chain + (fn,))
+
+    def prune(self, where) -> "Cube":
+        """This cube with `where`, a Column over ct/cy/cx, applied to its
+        stored chunk rows (no producer, or a cached df), so the filter
+        reaches a parquet scan. Produced chunks are made either way; the
+        consumer skips the ones it does not need in its worker."""
+        if self._producer is None or self.df.is_cached:
+            return Cube(self.df.filter(where), self.view, list(self.bands), self.chunking)
+        return self
+
+    def gather_time(self, fn, view: Optional[CubeView] = None, bands: Optional[List[str]] = None,
+                    chunking: Optional[ChunkGrid] = None) -> "Cube":
+        """Wide op over whole time columns: the chunks of each spatial chunk
+        meet in one pinned group as its (nb, nt, ny, nx) column, NaN where a
+        chunk is missing, and fn(column, (icy, icx)) yields the output items.
+        fill_time, apply_time, reduce_time's exact path and reduce_time_udf."""
+        g, nb = self.chunking, len(self.bands)
+
+        def make(key, pdf):
+            icy, icx = divmod(int(key[0]), g.ncx)
+            col = np.full((nb, g.nt) + g.chunk_shape(0, icy, icx)[1:], np.nan)
+            for _, coords, t in chunk_items(key, pdf):
+                (t0, t1), _, _ = g.chunk_cell_range(*coords)
+                col[:, t0:t1] = t
+            return fn(col, (icy, icx))
+
+        keyed = self.df.withColumn("skey", F.col("cy").cast("long") * g.ncx + F.col("cx"))
+        pinned = pin_group_partitions(keyed, "skey", g.ncy * g.ncx)
+        return Cube.produce(Producer(pinned, ("skey",), make), view or self.view,
+                            list(bands or self.bands), chunking or g)
+
+    def gather_space(self, fn, view: CubeView, bands: List[str], chunking: ChunkGrid) -> "Cube":
+        """Wide op over whole space slabs: the chunks of each time chunk meet
+        in one group as its (nb, ntc, ny, nx) slab (space_slab), and
+        fn(slab, ict) yields the output items. reduce_space's exact path and
+        reduce_space_udf; the slice sinks read the same slabs."""
+        g, nb = self.chunking, len(self.bands)
+
+        def make(key, pdf):
+            ict = int(key[0])
+            return fn(space_slab(g, nb, ict, chunk_items(key, pdf)), ict)
+
+        return Cube.produce(Producer(self.df, ("ct",), make), view, bands, chunking)
 
     # ------------------------------------------------------------- long format
     def cells(self, drop_nan: bool = True, band_as_index: bool = False) -> DataFrame:
@@ -346,13 +435,11 @@ class Cube:
                     pack=pk.to_json())
         df = self.df
         if pk.type != "none":
-            def repack(batches: Iterable[pd.DataFrame]):
-                for pdf in batches:
-                    if len(pdf):
-                        pdf = pdf.copy()
-                        pdf["data"] = [pk.pack(tensor_of(r)) for _, r in pdf.iterrows()]
-                    yield pdf
-            df = df.mapInPandas(repack, CHUNK_SCHEMA)
+            def packed(cid, coords, t):
+                row = chunk_rows(cid, coords, t)[0]
+                row["data"] = pk.pack(t)
+                return [row]
+            df = self.stream(packed, CHUNK_SCHEMA)
         for k, val in meta.items():
             df = df.withColumn(f"_meta_{k}", F.lit(val))
         if format == "iceberg":
@@ -448,136 +535,110 @@ class Cube:
                 ") USING iceberg\nPARTITIONED BY (ct)\n"
                 "TBLPROPERTIES ('write.target-file-size-bytes'='134217728')")
 
-    def write_png_slices(self, path: str, band=None, vmin: float = None,
-                         vmax: float = None) -> "DataFrame":
-        """write_tif analogue (cube.cpp:292-615): one image file per time
-        slice. Each slice is assembled by ONE task (groupBy ct — the same
-        one-file-per-slice bound as the reference's GeoTIFF writer), scaled
-        to uint8 via [vmin, vmax] and encoded with the in-repo PNG codec
-        (NaN → 0). Returns a DataFrame(it, file, bytes_written) of what was
-        written. Executors write to `path` directly — use shared storage on
-        a real cluster."""
+    def _write_slices(self, path: str, ext: str, encode) -> DataFrame:
+        """The slice sink: one file per time slice, {path}/slice_<it>_<label>.
+        <ext>. Each time chunk's slab is assembled by ONE task (groupBy ct —
+        the reference's one-file-per-slice bound) and encode(plane (nb, ny,
+        nx)) → bytes runs per slice. Executors write to `path` directly —
+        use shared storage on a real cluster. Returns DataFrame(it, file,
+        bytes_written)."""
         import os as _os
 
+        g, nb = self.chunking, len(self.bands)
+        labels = [d.to_string().replace(":", "-") for d in self.view.time_labels()]
+        _os.makedirs(path, exist_ok=True)
+
+        def write_slab(key, pdf):
+            ict = int(key[0])
+            (t0, _), _, _ = g.chunk_cell_range(ict, 0, 0)
+            slab = space_slab(g, nb, ict, chunk_items(key, pdf))
+            rows = []
+            for lt in range(slab.shape[1]):
+                data = encode(slab[:, lt])
+                fn = f"{path}/slice_{t0 + lt:05d}_{labels[t0 + lt]}.{ext}"
+                with open(fn, "wb") as fh:
+                    fh.write(data)
+                rows.append((t0 + lt, fn, len(data)))
+            return pd.DataFrame(rows, columns=["it", "file", "bytes_written"])
+
+        return self.df.groupBy("ct").applyInPandas(write_slab, T.StructType([
+            T.StructField("it", T.IntegerType(), False),
+            T.StructField("file", T.StringType(), False),
+            T.StructField("bytes_written", T.LongType(), False),
+        ]))
+
+    def write_png_slices(self, path: str, band=None, vmin: float = None,
+                         vmax: float = None) -> "DataFrame":
+        """write_tif analogue (cube.cpp:292-615): one PNG per time slice
+        through the slice sink, scaled to uint8 via [vmin, vmax] and encoded
+        with the in-repo PNG codec (NaN → 0). Returns DataFrame(it, file,
+        bytes_written)."""
         from gdalcubes_spark import codecs as _codecs
 
-        v, g, bands = self.view, self.chunking, list(self.bands)
+        bands = list(self.bands)
         bsel = [bands.index(band)] if isinstance(band, str) else (
             [bands.index(b) for b in band] if band is not None else list(range(min(len(bands), 3))))
         if len(bsel) == 2 or len(bsel) > 3:
             raise ValueError("PNG export needs 1 (grey) or 3 (RGB) bands")
-        labels = [d.to_string().replace(":", "-") for d in v.time_labels()]
         lo = 0.0 if vmin is None else float(vmin)
         hi = 255.0 if vmax is None else float(vmax)
-        _os.makedirs(path, exist_ok=True)
 
-        out_schema = T.StructType([
-            T.StructField("it", T.IntegerType(), False),
-            T.StructField("file", T.StringType(), False),
-            T.StructField("bytes_written", T.LongType(), False),
-        ])
+        def encode(plane: np.ndarray) -> bytes:
+            scaled = np.clip((plane[bsel] - lo) / max(hi - lo, 1e-12) * 255.0, 0, 255)
+            return _codecs.encode(np.where(np.isnan(scaled), 0, scaled).astype(np.uint8), "png")
 
-        def write_slice(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            ict = int(key[0])
-            (t0, t1), _, _ = g.chunk_cell_range(ict, 0, 0)
-            rows = []
-            for lt in range(t1 - t0):
-                plane = np.full((len(bsel), v.ny, v.nx), np.nan)
-                for _, row in pdf.iterrows():
-                    _, (y0, y1), (x0, x1) = g.chunk_cell_range(int(row["ct"]), int(row["cy"]), int(row["cx"]))
-                    plane[:, y0:y1, x0:x1] = tensor_of(row)[bsel, lt]
-                it_global = t0 + lt
-                scaled = np.clip((plane - lo) / max(hi - lo, 1e-12) * 255.0, 0, 255)
-                a = np.where(np.isnan(scaled), 0, scaled).astype(np.uint8)
-                png = _codecs.encode(a, "png")
-                fn = f"{path}/slice_{it_global:05d}_{labels[it_global]}.png"
-                with open(fn, "wb") as fh:
-                    fh.write(png)
-                rows.append(dict(it=it_global, file=fn, bytes_written=len(png)))
-            return pd.DataFrame(rows, columns=["it", "file", "bytes_written"]) if rows else \
-                pd.DataFrame(columns=["it", "file", "bytes_written"])
-
-        return self.df.groupBy("ct").applyInPandas(write_slice, out_schema)
+        return self._write_slices(path, "png", encode)
 
     def write_tif(self, path: str, band=None, dtype: str = "float32",
                   nodata: float = -9999.0, tile: int = 256,
                   compress: str = "deflate", overviews: bool = True,
                   packing=None) -> "DataFrame":
         """write_tif / COG export (cube.cpp:292-615 `write_tif_collection`,
-        COG=TRUE path): one Cloud-Optimized GeoTIFF per time slice, REAL
-        GeoTIFF bytes from the in-repo pure-numpy codec (tiffcodec.py) —
-        tiled Deflate, factor-2 overview pyramid, ModelPixelScale/Tiepoint +
-        EPSG GeoKeys from the cube view, GDAL_NODATA. NaN cells become
-        `nodata` (the reference writes its per-band no_data the same way).
+        COG=TRUE path): one Cloud-Optimized GeoTIFF per time slice through
+        the slice sink, REAL GeoTIFF bytes from the in-repo pure-numpy codec
+        (tiffcodec.py) — tiled Deflate, factor-2 overview pyramid,
+        ModelPixelScale/Tiepoint + EPSG GeoKeys from the cube view,
+        GDAL_NODATA. NaN cells become `nodata` (the reference writes its
+        per-band no_data the same way).
 
         `packing` mirrors the reference's pack_minmax export (cube.h:52-96):
         a gdalcubes_spark.packing spec → integer bytes with scale/offset
-        applied BEFORE the dtype cast. Like the reference's writer, each
-        slice is assembled by one task (groupBy ct); executors write to
-        `path` directly — use shared storage on a real cluster. Returns
-        DataFrame(it, file, bytes_written)."""
-        import os as _os
-
+        applied BEFORE the dtype cast. Returns DataFrame(it, file,
+        bytes_written)."""
         from gdalcubes_spark import tiffcodec as _tc
 
         if packing is not None and (packing.type == "none" or
                                     packing.nodata is None or np.isnan(packing.nodata)):
             raise ValueError("write_tif packing needs an integer type with a "
                              "finite nodata code (GeoTIFF carries it in GDAL_NODATA)")
-        v, g, bands = self.view, self.chunking, list(self.bands)
+        v, bands = self.view, list(self.bands)
         bsel = [bands.index(band)] if isinstance(band, str) else (
             [bands.index(b) for b in band] if band is not None else list(range(len(bands))))
-        labels = [d.to_string().replace(":", "-") for d in v.time_labels()]
         epsg = None
         if isinstance(v.srs, str) and v.srs.upper().startswith("EPSG:"):
             epsg = int(v.srs.split(":")[1])
-        left, top, dx, dy = v.left, v.top, v.dx, v.dy
         nd = float(nodata)
         # snap tile dim to the slice size (multiple of 16) so small cubes
         # don't pad a 40x40 slice out to a 256x256 tile
         tile = min(tile, max(16, -(-max(v.ny, v.nx) // 16) * 16))
-        _os.makedirs(path, exist_ok=True)
 
-        out_schema = T.StructType([
-            T.StructField("it", T.IntegerType(), False),
-            T.StructField("file", T.StringType(), False),
-            T.StructField("bytes_written", T.LongType(), False),
-        ])
+        def encode(plane: np.ndarray) -> bytes:
+            plane = plane[bsel]
+            if packing is not None:
+                a = np.frombuffer(packing.pack(plane), dtype=packing.dtype).reshape(plane.shape).copy()
+                slice_nd = float(packing.nodata)
+            else:
+                a = np.where(np.isnan(plane), nd, plane).astype(dtype)
+                slice_nd = nd
+            # floats get the TechNote-3 byte-split predictor under deflate
+            # (what GDAL writes for float COGs — ~30% smaller on smooth
+            # fields); integers keep the auto predictor 2
+            pred = 3 if (compress == "deflate" and np.issubdtype(a.dtype, np.floating)) else None
+            return _tc.encode_geotiff(a, tile=tile, compress=compress, overviews=overviews,
+                                      predictor=pred, nodata=slice_nd,
+                                      left=v.left, top=v.top, dx=v.dx, dy=v.dy, epsg=epsg)
 
-        def write_slice(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            ict = int(key[0])
-            (t0, t1), _, _ = g.chunk_cell_range(ict, 0, 0)
-            rows = []
-            for lt in range(t1 - t0):
-                plane = np.full((len(bsel), v.ny, v.nx), np.nan)
-                for _, row in pdf.iterrows():
-                    _, (y0, y1), (x0, x1) = g.chunk_cell_range(int(row["ct"]), int(row["cy"]), int(row["cx"]))
-                    plane[:, y0:y1, x0:x1] = tensor_of(row)[bsel, lt]
-                if packing is not None:
-                    a = np.frombuffer(packing.pack(plane), dtype=packing.dtype
-                                      ).reshape(plane.shape).copy()
-                    slice_nd = float(packing.nodata)
-                else:
-                    a = np.where(np.isnan(plane), nd, plane).astype(dtype)
-                    slice_nd = nd
-                # floats get the TechNote-3 byte-split predictor under
-                # deflate (what GDAL writes for float COGs — ~30% smaller
-                # on smooth fields); integers keep the auto predictor 2
-                pred = 3 if (compress == "deflate"
-                             and np.issubdtype(a.dtype, np.floating)) else None
-                tif = _tc.encode_geotiff(
-                    a, tile=tile, compress=compress, overviews=overviews,
-                    predictor=pred, nodata=slice_nd,
-                    left=left, top=top, dx=dx, dy=dy, epsg=epsg)
-                it_global = t0 + lt
-                fn = f"{path}/slice_{it_global:05d}_{labels[it_global]}.tif"
-                with open(fn, "wb") as fh:
-                    fh.write(tif)
-                rows.append(dict(it=it_global, file=fn, bytes_written=len(tif)))
-            return pd.DataFrame(rows, columns=["it", "file", "bytes_written"]) if rows else \
-                pd.DataFrame(columns=["it", "file", "bytes_written"])
-
-        return self.df.groupBy("ct").applyInPandas(write_slice, out_schema)
+        return self._write_slices(path, "tif", encode)
 
     # operator API (implemented in gdalcubes_spark.operators.*; thin wrappers
     # so pipelines read like the reference's R verb chains)
@@ -717,19 +778,12 @@ def dummy_cube(spark: SparkSession, view: CubeView, nbands: int = 1, fill: float
     parts = min(n, max(1, spark.sparkContext.defaultParallelism))
     base = spark.range(0, n, numPartitions=parts).withColumnRenamed("id", "chunk_id")
 
-    def gen(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            rows = []
-            for cid in pdf["chunk_id"]:
-                ict, icy, icx = g.chunk_coords(int(cid))
-                nt, ny, nx = g.chunk_shape(ict, icy, icx)
-                t = np.full((nbands, nt, ny, nx), float(fill))
-                rows.append(dict(chunk_id=int(cid), ct=ict, cy=icy, cx=icx, nb=nbands, nt=nt, ny=ny, nx=nx,
-                                 data=pack_tensor(t)))
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields]) if rows else pd.DataFrame(
-                {f.name: pd.Series(dtype="object") for f in CHUNK_SCHEMA.fields})
+    def make(key, pdf: pd.DataFrame):
+        for cid in pdf["chunk_id"].to_numpy():
+            coords = g.chunk_coords(int(cid))
+            yield int(cid), coords, np.full((len(bands),) + g.chunk_shape(*coords), float(fill))
 
-    return Cube(base.mapInPandas(gen, CHUNK_SCHEMA), view, bands, g)
+    return Cube.produce(Producer(base, None, make), view, bands, g)
 
 
 def empty_cube(spark: SparkSession, view: CubeView, nbands: int = 1,
@@ -787,16 +841,13 @@ def read_parquet_cube(spark: SparkSession, path: str) -> Cube:
     bands = meta["_meta_bands"].split(",")
     g = ChunkGrid(nt=view.nt, ny=view.ny, nx=view.nx, ct=int(meta["_meta_ct"]),
                   cy=int(meta["_meta_cy"]), cx=int(meta["_meta_cx"]))
-    out = df.select([f.name for f in CHUNK_SCHEMA.fields])
+    out = df.select(CHUNK_COLUMNS)
     pk = Packing.from_json(meta["_meta_pack"]) if "_meta_pack" in cols else Packing()
-    if pk.type != "none":
-        def unpack(batches: Iterable[pd.DataFrame]):
-            for pdf in batches:
-                if len(pdf):
-                    pdf = pdf.copy()
-                    pdf["data"] = [pack_tensor(pk.unpack(r["data"],
-                                                         (int(r["nb"]), int(r["nt"]), int(r["ny"]), int(r["nx"]))))
-                                   for _, r in pdf.iterrows()]
-                yield pdf
-        out = out.mapInPandas(unpack, CHUNK_SCHEMA)
-    return Cube(out, view, bands, g)
+    if pk.type == "none":
+        return Cube(out, view, bands, g)
+
+    def unpack(key, pdf: pd.DataFrame):
+        for cid, coords, shape, data in _chunk_payloads(pdf):
+            yield cid, coords, pk.unpack(data, shape)
+
+    return Cube.produce(Producer(out, None, unpack), view, bands, g)

@@ -27,9 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gdalcubes_spark.cube import Cube, pin_group_partitions, tensor_of
+from gdalcubes_spark.cube import Cube, chunk_items, pin_group_partitions
 from gdalcubes_spark.geom import parse_wkt
-from gdalcubes_spark.grid import Datetime
 
 _POINT_RE = re.compile(r"^\s*POINT\s*\(\s*([-+0-9.eE]+)\s+([-+0-9.eE]+)\s*\)\s*$", re.I)
 
@@ -75,8 +74,9 @@ def extract_geom(cube: Cube, features: DataFrame, time_column: Optional[str] = N
     def prep(batches):
         for pdf in batches:
             rows = []
-            for _, row in pdf.iterrows():
-                l, b, r, t = _feature_bbox(row["wkt"])
+            times = pdf[time_column].to_numpy() if has_time else [None] * len(pdf)
+            for fid, wkt, ft in zip(pdf["fid"].to_numpy(), pdf["wkt"].to_numpy(), times):
+                l, b, r, t = _feature_bbox(wkt)
                 x0 = max(0, int(math.floor((l - vleft) / dx)))
                 x1 = min(nx - 1, int(math.ceil((r - vleft) / dx - 1e-9) - 1)) if r > l else x0
                 x1 = max(x1, x0)
@@ -85,13 +85,9 @@ def extract_geom(cube: Cube, features: DataFrame, time_column: Optional[str] = N
                 y1 = max(y1, y0)
                 if x0 > nx - 1 or y0 > ny - 1 or x1 < 0 or y1 < 0:
                     continue
-                fe = None
-                if has_time and row[time_column] is not None:
-                    fe = int(pd.Timestamp(row[time_column]).timestamp())
-                rows.append(dict(fid=int(row["fid"]), wkt=row["wkt"], fepoch=fe,
-                                 x0=x0, x1=x1, y0=y0, y1=y1))
-            yield pd.DataFrame(rows, columns=[f.name for f in bbox_schema.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in bbox_schema.fields})
+                fe = None if pd.isna(ft) else int(pd.Timestamp(ft).timestamp())
+                rows.append(dict(fid=int(fid), wkt=wkt, fepoch=fe, x0=x0, x1=x1, y0=y0, y1=y1))
+            yield pd.DataFrame(rows, columns=bbox_schema.fieldNames())
 
     fb = features.mapInPandas(prep, bbox_schema)
     # explode to covering chunk ids (kt unconstrained unless feature has time)
@@ -140,18 +136,15 @@ def extract_geom(cube: Cube, features: DataFrame, time_column: Optional[str] = N
         )
 
     def gather(chunks: pd.DataFrame, feats_: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({f.name: pd.Series(dtype="object") for f in out_schema.fields})
+        empty = pd.DataFrame(columns=out_schema.fieldNames())
         if len(chunks) == 0 or len(feats_) == 0:
             return empty
-        row = chunks.iloc[0]
-        t_ = tensor_of(row)
-        kt, ky, kx = int(row["ct"]), int(row["cy"]), int(row["cx"])
-        (ct0, ct1), (cy0, cy1), (cx0, cx1) = g.chunk_cell_range(kt, ky, kx)
+        _, coords, t_ = next(chunk_items(None, chunks))
+        (ct0, ct1), (cy0, cy1), (cx0, cx1) = g.chunk_cell_range(*coords)
         xs = vleft + (np.arange(cx0, cx1) + 0.5) * dx
         ys = vtop - (np.arange(cy0, cy1) + 0.5) * dy
         frames = []
-        for _, f in feats_.iterrows():
-            wkt = f["wkt"]
+        for fid, wkt, it_f in zip(feats_["fid"].to_numpy(), feats_["wkt"].to_numpy(), feats_["it_f"].to_numpy()):
             pm = _POINT_RE.match(wkt)
             if pm:
                 px, py = float(pm.group(1)), float(pm.group(2))
@@ -178,14 +171,14 @@ def extract_geom(cube: Cube, features: DataFrame, time_column: Optional[str] = N
                 yy, xx = np.nonzero(inside)
                 sel_y = yy + sy0
                 sel_x = xx + sx0
-            its = range(ct0, ct1) if int(f["it_f"]) < 0 else [int(f["it_f"])]
+            its = range(ct0, ct1) if int(it_f) < 0 else [int(it_f)]
             for it in its:
                 lt = it - ct0
                 vals = t_[:, lt, sel_y, sel_x]  # (nb, ncells)
                 keep = ~np.all(np.isnan(vals), axis=0)  # drop all-NaN rows
                 if not keep.any():
                     continue
-                d = {"fid": int(f["fid"]), "it": it, "time": time_strings[it]}
+                d = {"fid": int(fid), "it": it, "time": time_strings[it]}
                 if _partials:
                     v = vals[:, keep]
                     ok = ~np.isnan(v)

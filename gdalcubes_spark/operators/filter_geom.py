@@ -6,9 +6,11 @@ pass-through if the chunk rectangle is fully contained (:196-215,231-234),
 else rasterize at cell resolution (point-in-polygon per cell center,
 :242-302) and NaN-out outside pixels.
 
-Spark shape: the chunk-range prune is a `filter` on chunk-coord columns
-(partition pruning); contains/disjoint fast paths skip the PIP entirely;
-the exact PIP runs vectorized in numpy only on boundary chunks.
+Spark shape: the chunk-range prune is a `filter` on stored chunk-coord
+columns (partition pruning) and a skip in the worker; the mask is a narrow
+map_chunks, so it fuses onto the cube's producer. contains/disjoint fast
+paths skip the PIP entirely; the exact PIP runs vectorized in numpy only on
+boundary chunks.
 The output cube is cropped to the polygon bbox (snap "out"), like the
 reference re-views the cube to the geometry extent.
 """
@@ -16,13 +18,11 @@ reference re-views the cube to the geometry extent.
 from __future__ import annotations
 
 import math
-from typing import Iterable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, pack_tensor, tensor_of
+from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube
 from gdalcubes_spark.geom import parse_wkt
 
 
@@ -42,43 +42,25 @@ def filter_geom(cube: Cube, wkt: str) -> Cube:
 
     kx0, kx1 = x0 // g.cx, (x1 - 1) // g.cx
     ky0, ky1 = y0 // g.cy, (y1 - 1) // g.cy
-    pruned = cube.df.filter((F.col("cx") >= kx0) & (F.col("cx") <= kx1)
-                            & (F.col("cy") >= ky0) & (F.col("cy") <= ky1))
-
     vleft, vtop, dx, dy = view.left, view.top, view.dx, view.dy
 
-    def gen(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                icy, icx = int(row["cy"]), int(row["cx"])
-                _, (cy0, cy1), (cx0, cx1) = g.chunk_cell_range(int(row["ct"]), icy, icx)
-                cl = vleft + cx0 * dx
-                cr = vleft + cx1 * dx
-                ctp = vtop - cy0 * dy
-                cb = vtop - cy1 * dy
-                if geom.disjoint_bbox(cl, cb, cr, ctp):
-                    continue
-                if geom.contains_rect(cl, cb, cr, ctp):
-                    rows.append(row.to_dict())  # zero-copy pass-through
-                    continue
-                t = tensor_of(row)
-                xs = vleft + (np.arange(cx0, cx1) + 0.5) * dx
-                ys = vtop - (np.arange(cy0, cy1) + 0.5) * dy
-                X, Y = np.meshgrid(xs, ys)
-                inside = geom.contains(X.ravel(), Y.ravel()).reshape(X.shape)
-                if not inside.any():
-                    continue
-                out = np.where(inside[None, None, :, :], t, np.nan)
-                if np.all(np.isnan(out)):
-                    continue
-                d = row.to_dict()
-                d["data"] = pack_tensor(out)
-                rows.append(d)
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in CHUNK_SCHEMA.fields})
+    def mask(t: np.ndarray, coords):
+        if not (ky0 <= coords[1] <= ky1 and kx0 <= coords[2] <= kx1):
+            return None
+        _, (cy0, cy1), (cx0, cx1) = g.chunk_cell_range(*coords)
+        cl, cr = vleft + cx0 * dx, vleft + cx1 * dx
+        ctp, cb = vtop - cy0 * dy, vtop - cy1 * dy
+        if geom.disjoint_bbox(cl, cb, cr, ctp):
+            return None
+        if geom.contains_rect(cl, cb, cr, ctp):
+            return t  # zero-copy pass-through
+        xs = vleft + (np.arange(cx0, cx1) + 0.5) * dx
+        ys = vtop - (np.arange(cy0, cy1) + 0.5) * dy
+        X, Y = np.meshgrid(xs, ys)
+        inside = geom.contains(X.ravel(), Y.ravel()).reshape(X.shape)
+        return np.where(inside[None, None, :, :], t, np.nan) if inside.any() else None
 
-    masked = Cube(pruned.mapInPandas(gen, CHUNK_SCHEMA), view, list(cube.bands), g)
+    masked = cube.prune(F.col("cx").between(kx0, kx1) & F.col("cy").between(ky0, ky1)).map_chunks(mask)
     # crop to the geometry bbox; bounds are already cell-aligned (x0/x1/y0/y1
     # are cell indices), so snap="in" keeps them exactly — no outward growth
     from gdalcubes_spark.operators.select import crop

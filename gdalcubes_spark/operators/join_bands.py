@@ -5,7 +5,8 @@ band-name prefixes on conflict (:118-147). Coverage gaps are NaN.
 
 Spark shape: a full outer equi-join on chunk_id. Shapes are guaranteed equal
 ⇒ no skew; Catalyst picks sort-merge or shuffled hash; with identical
-upstream partitioning the exchange is often reused.
+upstream partitioning the exchange is often reused. The concatenation is
+the output cube's producer, so narrow ops after join_bands fuse into it.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, pack_tensor
+from gdalcubes_spark.cube import Cube, Producer
 
 
 def join_bands(cubes: Sequence[Cube], prefixes: Optional[Sequence[str]] = None) -> Cube:
@@ -43,7 +44,6 @@ def join_bands(cubes: Sequence[Cube], prefixes: Optional[Sequence[str]] = None) 
             out_bands.append(f"{pre}.{b}" if (prefixes or counts[b] > 1) else b)
 
     nbs = [len(c.bands) for c in cubes]
-    nb_total = sum(nbs)
 
     dfs = []
     for i, c in enumerate(cubes):
@@ -60,26 +60,13 @@ def join_bands(cubes: Sequence[Cube], prefixes: Optional[Sequence[str]] = None) 
         for col in ("ct", "cy", "cx", "nt", "ny", "nx"):
             joined = joined.withColumn(col, F.coalesce(F.col(col), F.col(f"_{col}{i}"))).drop(f"_{col}{i}")
 
-    g = g0
+    def combine(key, pdf: pd.DataFrame):
+        cols = [pdf[c].to_numpy() for c in ("chunk_id", "ct", "cy", "cx", "nt", "ny", "nx")]
+        datas = [pdf[f"d{i}"].to_numpy() for i in range(len(nbs))]
+        for j, (cid, ct, cy, cx, nt, ny, nx) in enumerate(zip(*cols)):
+            shape = (int(nt), int(ny), int(nx))
+            parts = [np.full((nb,) + shape, np.nan) if d[j] is None
+                     else np.frombuffer(d[j], dtype="<f8").reshape((nb,) + shape) for nb, d in zip(nbs, datas)]
+            yield int(cid), (int(ct), int(cy), int(cx)), np.concatenate(parts, axis=0)
 
-    def combine(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                nt, ny, nx = int(row["nt"]), int(row["ny"]), int(row["nx"])
-                parts = []
-                for i, nb in enumerate(nbs):
-                    d = row[f"d{i}"]
-                    if d is None:
-                        parts.append(np.full((nb, nt, ny, nx), np.nan))
-                    else:
-                        parts.append(np.frombuffer(d, dtype="<f8").reshape(nb, nt, ny, nx))
-                t = np.concatenate(parts, axis=0)
-                rows.append(dict(chunk_id=int(row["chunk_id"]), ct=int(row["ct"]), cy=int(row["cy"]),
-                                 cx=int(row["cx"]), nb=nb_total, nt=nt, ny=ny, nx=nx,
-                                 data=pack_tensor(t)))
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in CHUNK_SCHEMA.fields})
-
-    out = joined.mapInPandas(combine, CHUNK_SCHEMA)
-    return Cube(out, v0, out_bands, g0)
+    return Cube.produce(Producer(joined, None, combine), v0, out_bands, g0)

@@ -27,7 +27,7 @@ from typing import List, Optional, Sequence, Tuple
 import numpy as np
 import pandas as pd
 
-from gdalcubes_spark.cube import Cube, Producer, chunk_items, pack_tensor, pin_group_partitions
+from gdalcubes_spark.cube import Cube, Producer, pack_tensor
 from gdalcubes_spark.grid import ChunkGrid
 from gdalcubes_spark import reducers as R
 
@@ -149,25 +149,15 @@ def reduce_time(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] =
         parts = cube.stream(partial, part_schema)
         return Cube.produce(Producer(parts, ("skey",), merge_group), out_view, out_bands, gout)
 
-    # ---- gather path (exact quantiles) --------------------------------------
-    from pyspark.sql import functions as F
+    # ---- gather path (exact quantiles): the whole time column -----------------
+    its = np.arange(g.nt)
+    td = _t_doubles(view, its) if any(r.startswith("which") for r in rnames) else None
 
-    def gather(key, pdf: pd.DataFrame):
-        vals, its = [], []
-        for _, (ct, cy, cx), t in sorted(chunk_items(key, pdf), key=lambda item: item[1]):
-            (t0, t1), _, _ = g.chunk_cell_range(ct, cy, cx)
-            vals.append(t)
-            its.append(np.arange(t0, t1))
-        v = np.concatenate(vals, axis=1)  # (nb, T, ny, nx)
-        its = np.concatenate(its)
-        td = _t_doubles(view, its) if any(r.startswith("which") for r in rnames) else None
-        outs = [R.full_reduce(r, v[bi], its, td) for r, bi in zip(rnames, bidx)]
-        t = np.stack(outs, axis=0)[:, None, :, :]
-        yield gout.chunk_id(0, cy, cx), (0, cy, cx), t
+    def gather(col: np.ndarray, sp):
+        t = np.stack([R.full_reduce(r, col[bi], its, td) for r, bi in zip(rnames, bidx)], axis=0)[:, None]
+        yield gout.chunk_id(0, *sp), (0, *sp), t
 
-    keyed = cube.df.withColumn("skey", F.col("cy").cast("long") * g.ncx + F.col("cx"))
-    pinned = pin_group_partitions(keyed, "skey", g.ncy * g.ncx)
-    return Cube.produce(Producer(pinned, ("skey",), gather), out_view, out_bands, gout)
+    return cube.gather_time(gather, out_view, out_bands, gout)
 
 
 def reduce_space(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] = None) -> Cube:
@@ -236,20 +226,14 @@ def reduce_space(cube: Cube, reducers: Sequence, names: Optional[Sequence[str]] 
         parts = cube.stream(partial, part_schema)
         return Cube.produce(Producer(parts, ("ct",), merge_group), out_view, out_bands, gout)
 
-    # gather path for exact median: all spatial chunks of a t-slab in one group.
-    # Memory bound = one full t-slab, same as the reference's per-thread scan.
-    def gather(key, pdf: pd.DataFrame):
-        chunks = [t for _, _, t in chunk_items(key, pdf)]
-        nt = chunks[0].shape[1]
-        outs = []
-        for r, bi in zip(rnames, bidx):
-            v = np.concatenate([c[bi].reshape(nt, -1) for c in chunks], axis=1).T  # (cells, nt)
-            outs.append(R.full_reduce(r, v))
-        t = np.stack(outs, axis=0)[:, :, None, None]
-        ict = int(key[0])
-        yield gout.chunk_id(ict, 0, 0), (ict, 0, 0), t
+    # gather path for exact median: the whole t-slab in one group. Memory
+    # bound = one full t-slab, same as the reference's per-thread scan.
+    def gather(slab: np.ndarray, ict: int):
+        nt = slab.shape[1]
+        t = np.stack([R.full_reduce(r, slab[bi].reshape(nt, -1).T) for r, bi in zip(rnames, bidx)], axis=0)
+        yield gout.chunk_id(ict, 0, 0), (ict, 0, 0), t[:, :, None, None]
 
-    return Cube.produce(Producer(cube.df, ("ct",), gather), out_view, out_bands, gout)
+    return cube.gather_space(gather, out_view, out_bands, gout)
 
 
 def value_histogram(cube: Cube, bins: int = 32, vmin: float = None,

@@ -6,22 +6,30 @@ rename_bands.h:45, slice_time.h:45-85, slice_space.h:46-110,
 select_time.h:22-72 (labeled time axis), crop.h:51-130 (snap near|in|out on
 cell indices).
 
-Spark shapes: band ops and slices are narrow (filter on chunk-coord columns —
-this is partition pruning, the tensor op runs only on surviving chunks).
-crop re-grids chunk space: chunk pieces are shuffled by output chunk id
-(one bounded shuffle) unless the crop is chunk-aligned.
+Spark shapes: band ops are narrow map_chunks. slice_time, slice_space,
+select_time, crop and crop_indices are one regrid: an output→input cell
+index array per axis. Its chunk-coordinate prune is derived from those
+arrays (partition pruning on stored chunk rows). When every output chunk has
+exactly one source chunk the regrid is narrow and fuses onto the producer;
+otherwise input chunks are cut map-side and the pieces shuffle once on the
+output chunk id.
 """
 
 from __future__ import annotations
 
+import dataclasses
+import functools
+import itertools
 import math
-from typing import Iterable, List, Optional, Sequence
+import operator
+from typing import Optional, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, pack_tensor, tensor_of
+from gdalcubes_spark.cube import Cube, Producer, pack_tensor, piece_tensors, pin_group_partitions
 from gdalcubes_spark.grid import ChunkGrid, CubeView, Datetime
 
 
@@ -47,8 +55,8 @@ def rename_bands(cube: Cube, mapping: dict) -> Cube:
     unknown = set(mapping) - set(cube.bands)
     if unknown:
         raise ValueError(f"unknown bands {unknown}")
-    new = [mapping.get(b, b) for b in cube.bands]
-    return Cube(cube.df, cube.view, new, cube.chunking)
+    # keep the producer and pending chain, so the next narrow op still fuses
+    return dataclasses.replace(cube, bands=[mapping.get(b, b) for b in cube.bands])
 
 
 def slice_time(cube: Cube, t=None, it: Optional[int] = None) -> Cube:
@@ -60,29 +68,10 @@ def slice_time(cube: Cube, t=None, it: Optional[int] = None) -> Cube:
     it = int(it)
     if not (0 <= it < view.nt):
         raise ValueError(f"time index {it} out of range [0, {view.nt})")
-    ict, loc = it // g.ct, it % g.ct
     out_view = view.copy(labels=None)  # single regular slice; stale labels would force nt=len(labels)
-    tsel = view.datetime_at_index(it)
-    out_view.t0 = tsel
-    out_view.t1 = tsel
+    out_view.t0 = out_view.t1 = view.datetime_at_index(it)
     gout = ChunkGrid(nt=1, ny=g.ny, nx=g.nx, ct=1, cy=g.cy, cx=g.cx)
-
-    def gen(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                t_ = tensor_of(row)[:, loc : loc + 1]
-                if np.all(np.isnan(t_)):
-                    continue
-                cy, cx = int(row["cy"]), int(row["cx"])
-                rows.append(dict(chunk_id=gout.chunk_id(0, cy, cx), ct=0, cy=cy, cx=cx,
-                                 nb=t_.shape[0], nt=1, ny=t_.shape[2], nx=t_.shape[3], data=pack_tensor(t_)))
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in CHUNK_SCHEMA.fields})
-
-    # partition pruning: only the one chunk slab along t is read
-    df = cube.df.filter(F.col("ct") == ict).mapInPandas(gen, CHUNK_SCHEMA)
-    return Cube(df, out_view, list(cube.bands), gout)
+    return _regrid(cube, ([it], np.arange(view.ny), np.arange(view.nx)), out_view, gout)
 
 
 def slice_space(cube: Cube, x: Optional[float] = None, y: Optional[float] = None,
@@ -94,83 +83,23 @@ def slice_space(cube: Cube, x: Optional[float] = None, y: Optional[float] = None
         ix = int((x - view.left) / view.dx)
         iy = int((view.top - y) / view.dy)
     ix, iy = int(ix), int(iy)
-    icy, icx, ly, lx = iy // g.cy, ix // g.cx, iy % g.cy, ix % g.cx
     out_view = view.copy()
     out_view.set_x_axis(view.left + ix * view.dx, view.left + (ix + 1) * view.dx, n=1)
     out_view.set_y_axis(view.top - (iy + 1) * view.dy, view.top - iy * view.dy, n=1)
     gout = ChunkGrid(nt=g.nt, ny=1, nx=1, ct=g.ct, cy=1, cx=1)
-
-    def gen(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                t_ = tensor_of(row)[:, :, ly : ly + 1, lx : lx + 1]
-                if np.all(np.isnan(t_)):
-                    continue
-                ict = int(row["ct"])
-                rows.append(dict(chunk_id=gout.chunk_id(ict, 0, 0), ct=ict, cy=0, cx=0,
-                                 nb=t_.shape[0], nt=t_.shape[1], ny=1, nx=1, data=pack_tensor(t_)))
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in CHUNK_SCHEMA.fields})
-
-    df = cube.df.filter((F.col("cy") == icy) & (F.col("cx") == icx)).mapInPandas(gen, CHUNK_SCHEMA)
-    return Cube(df, out_view, list(cube.bands), gout)
+    return _regrid(cube, (np.arange(view.nt), [iy], [ix]), out_view, gout)
 
 
 def select_time(cube: Cube, datetimes: Sequence) -> Cube:
     """Pick arbitrary datetime slices → labeled (irregular) time axis
-    (select_time.h:22-72). The label list is broadcast via the view copy."""
+    (select_time.h:22-72), one output time chunk. The label list is
+    broadcast via the view copy."""
     view, g = cube.view, cube.chunking
-    its = []
-    labels = []
-    for t in datetimes:
-        d = Datetime.parse(t) if isinstance(t, str) else t
-        its.append(view.index_at_datetime(d))
-        labels.append(view.datetime_at_index(its[-1]))
-    order = list(range(len(its)))
+    its = [view.index_at_datetime(Datetime.parse(t) if isinstance(t, str) else t) for t in datetimes]
+    labels = [view.datetime_at_index(it) for it in its]
     out_view = view.copy(t0=labels[0], t1=labels[-1], labels=tuple(labels))
     gout = ChunkGrid(nt=len(its), ny=g.ny, nx=g.nx, ct=len(its), cy=g.cy, cx=g.cx)
-    wanted = {}
-    for oi, it in zip(order, its):
-        wanted.setdefault(it // g.ct, []).append((oi, it % g.ct))
-    wanted_cts = sorted(wanted)
-
-    piece_schema = CHUNK_SCHEMA
-
-    def gen(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                ict = int(row["ct"])
-                if ict not in wanted:
-                    continue
-                t_ = tensor_of(row)
-                for oi, loc in wanted[ict]:
-                    s = t_[:, loc : loc + 1]
-                    if np.all(np.isnan(s)):
-                        continue
-                    cy, cx = int(row["cy"]), int(row["cx"])
-                    rows.append(dict(chunk_id=oi * 10**9 + gout.chunk_id(0, cy, cx), ct=oi, cy=cy, cx=cx,
-                                     nb=s.shape[0], nt=1, ny=s.shape[2], nx=s.shape[3], data=pack_tensor(s)))
-            yield pd.DataFrame(rows, columns=[f.name for f in piece_schema.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in piece_schema.fields})
-
-    # assemble slices per output chunk (ct dimension = label index, ct_chunk = nt)
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        cy, cx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
-        ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
-        nb = int(pdf.iloc[0]["nb"])
-        t = np.full((nb, len(its), ny, nx), np.nan)
-        for _, row in pdf.iterrows():
-            t[:, int(row["ct"])] = tensor_of(row)[:, 0]
-        cid = gout.chunk_id(0, cy, cx)
-        return pd.DataFrame([dict(chunk_id=cid, ct=0, cy=cy, cx=cx, nb=nb, nt=len(its),
-                                  ny=ny, nx=nx, data=pack_tensor(t))])
-
-    pieces = cube.df.filter(F.col("ct").isin(wanted_cts)).mapInPandas(gen, piece_schema)
-    df = pieces.withColumn("skey", F.col("cy").cast("long") * g.ncx + F.col("cx")) \
-        .groupBy("skey").applyInPandas(assemble, CHUNK_SCHEMA)
-    return Cube(df, out_view, list(cube.bands), gout)
+    return _regrid(cube, (its, np.arange(view.ny), np.arange(view.nx)), out_view, gout)
 
 
 def _snap_idx(v: float, origin: float, delta: float, mode: str, lo: bool) -> int:
@@ -186,9 +115,9 @@ def _snap_idx(v: float, origin: float, delta: float, mode: str, lo: bool) -> int
 
 def crop(cube: Cube, left=None, right=None, bottom=None, top=None, t0=None, t1=None,
          snap: str = "near") -> Cube:
-    """Crop by extent/time with index snapping (crop.h:51-130). Cell-index
-    ranges are computed once; chunk pieces shuffle to the re-origined grid."""
-    view, g = cube.view, cube.chunking
+    """Crop by extent/time with index snapping (crop.h:51-130); the snapped
+    cell-index ranges go to crop_indices."""
+    view = cube.view
     x0 = _snap_idx(left, view.left, view.dx, snap, True) if left is not None else 0
     x1 = _snap_idx(right, view.left, view.dx, snap, False) if right is not None else view.nx
     # y axis counts down from top
@@ -202,27 +131,14 @@ def crop(cube: Cube, left=None, right=None, bottom=None, top=None, t0=None, t1=N
         tt1 = view.index_at_datetime(Datetime.parse(t1) if isinstance(t1, str) else t1) + 1
     else:
         tt1 = view.nt
-    x0, x1 = max(0, x0), min(view.nx, x1)
-    y0, y1 = max(0, y0), min(view.ny, y1)
-    tt0, tt1 = max(0, tt0), min(view.nt, tt1)
-    if x1 <= x0 or y1 <= y0 or tt1 <= tt0:
-        raise ValueError("empty crop")
-
-    # labeled axis: keep only the labels inside the crop window
-    out_view = view.copy(labels=(view.labels[tt0:tt1] if view.labels is not None else None))
-    out_view.set_x_axis(view.left + x0 * view.dx, view.left + x1 * view.dx, n=x1 - x0)
-    out_view.set_y_axis(view.top - y1 * view.dy, view.top - y0 * view.dy, n=y1 - y0)
-    out_view.t0 = view.datetime_at_index(tt0)
-    out_view.t1 = view.datetime_at_index(tt1 - 1)
-    gout = ChunkGrid(nt=tt1 - tt0, ny=y1 - y0, nx=x1 - x0, ct=g.ct, cy=g.cy, cx=g.cx)
-    return _regrid(cube, (tt0, tt1), (y0, y1), (x0, x1), out_view, gout)
+    return crop_indices(cube, ix0=x0, ix1=x1, iy0=y0, iy1=y1, it0=tt0, it1=tt1)
 
 
 def crop_indices(cube: Cube, ix0: int = 0, ix1: Optional[int] = None,
                  iy0: int = 0, iy1: Optional[int] = None,
                  it0: int = 0, it1: Optional[int] = None) -> Cube:
     """The reference crop's INDEX variant (crop.h:74-130): half-open cell
-    index ranges instead of coordinates — same regrid machinery."""
+    index ranges instead of coordinates; ranges are clipped to the cube."""
     view, g = cube.view, cube.chunking
     x1 = view.nx if ix1 is None else int(ix1)
     y1 = view.ny if iy1 is None else int(iy1)
@@ -231,84 +147,92 @@ def crop_indices(cube: Cube, ix0: int = 0, ix1: Optional[int] = None,
     x1, y1, t1 = min(view.nx, x1), min(view.ny, y1), min(view.nt, t1)
     if x1 <= x0 or y1 <= y0 or t1 <= t0:
         raise ValueError("empty crop")
+    # labeled axis: keep only the labels inside the crop window
     out_view = view.copy(labels=(view.labels[t0:t1] if view.labels is not None else None))
     out_view.set_x_axis(view.left + x0 * view.dx, view.left + x1 * view.dx, n=x1 - x0)
     out_view.set_y_axis(view.top - y1 * view.dy, view.top - y0 * view.dy, n=y1 - y0)
     out_view.t0 = view.datetime_at_index(t0)
     out_view.t1 = view.datetime_at_index(t1 - 1)
     gout = ChunkGrid(nt=t1 - t0, ny=y1 - y0, nx=x1 - x0, ct=g.ct, cy=g.cy, cx=g.cx)
-    return _regrid(cube, (t0, t1), (y0, y1), (x0, x1), out_view, gout)
+    return _regrid(cube, (np.arange(t0, t1), np.arange(y0, y1), np.arange(x0, x1)), out_view, gout)
 
 
-def _regrid(cube: Cube, trange, yrange, xrange, out_view: CubeView, gout: ChunkGrid) -> Cube:
-    """Shift/crop cube cells into a new chunk grid. Input chunks are cut into
-    pieces per output chunk and shuffled once on the output chunk id."""
+_PIECE_SCHEMA = T.StructType([
+    T.StructField("tkey", T.LongType(), False),  # output chunk id
+    T.StructField("src", T.LongType(), False),   # source chunk id
+    T.StructField("nb", T.IntegerType(), False),
+    T.StructField("nt", T.IntegerType(), False),
+    T.StructField("ny", T.IntegerType(), False),
+    T.StructField("nx", T.IntegerType(), False),
+    T.StructField("data", T.BinaryType(), False),
+])
+
+
+def _as_index(a: np.ndarray):
+    """A slice (a view) when the indices are one ascending run, else the array."""
+    return slice(int(a[0]), int(a[-1]) + 1) if np.array_equal(a, np.arange(a[0], a[0] + len(a))) else a
+
+
+def _regrid(cube: Cube, idx, out_view: CubeView, gout: ChunkGrid) -> Cube:
+    """Output cell i along axis a (t, y, x) is input cell idx[a][i].
+    parts[a] maps each input chunk index to the output chunks it feeds as
+    (output chunk index, local input indices); at[a] gives the positions
+    those cells take in the output chunk. A (t, y, x) combination is one
+    piece."""
     g = cube.chunking
-    tt0, tt1 = trange
-    y0, y1 = yrange
-    x0, x1 = xrange
+    parts, at, narrow = [], [], True
+    for axis_idx, cin, cout in zip(idx, (g.ct, g.cy, g.cx), (gout.ct, gout.cy, gout.cx)):
+        axis_idx = np.asarray(axis_idx, dtype=np.int64)
+        per_src, pos = {}, {}
+        for k in range(-(-len(axis_idx) // cout)):
+            cells = axis_idx[k * cout:(k + 1) * cout]
+            srcs = np.unique(cells // cin)
+            narrow = narrow and len(srcs) == 1
+            for i in map(int, srcs):
+                pos[i, k] = np.flatnonzero(cells // cin == i)
+                per_src.setdefault(i, []).append((k, _as_index(cells[pos[i, k]] - i * cin)))
+        parts.append(per_src)
+        at.append(pos)
 
-    # prune input chunks outside the crop (partition pruning on chunk coords)
-    df = cube.df.filter(
-        (F.col("ct") >= tt0 // g.ct) & (F.col("ct") <= (tt1 - 1) // g.ct)
-        & (F.col("cy") >= y0 // g.cy) & (F.col("cy") <= (y1 - 1) // g.cy)
-        & (F.col("cx") >= x0 // g.cx) & (F.col("cx") <= (x1 - 1) // g.cx)
-    )
+    def pieces(coords, t):
+        """(output chunk coords, piece) for each output chunk that the input
+        chunk at `coords` feeds; all-NaN pieces are dropped."""
+        for (kt, lt), (ky, ly), (kx, lx) in itertools.product(*(p.get(i, ()) for p, i in zip(parts, coords))):
+            piece = t[:, lt][:, :, ly][:, :, :, lx]
+            if not np.all(np.isnan(piece)):
+                yield (kt, ky, kx), piece
 
-    piece_schema = CHUNK_SCHEMA  # reuse: ct/cy/cx double as dest offsets via chunk_id key
+    # partition pruning on chunk coords: only input chunks some output cell reads
+    where = []
+    for col, per_src, n in zip(("ct", "cy", "cx"), parts, (g.nct, g.ncy, g.ncx)):
+        need = sorted(per_src)
+        if len(need) < n:
+            run = need[-1] - need[0] + 1 == len(need)
+            where.append(F.col(col).between(need[0], need[-1]) if run else F.col(col).isin(need))
+    pruned = cube.prune(functools.reduce(operator.and_, where)) if where else cube
 
-    def cut(batches: Iterable[pd.DataFrame]):
-        import itertools
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                t_ = tensor_of(row)
-                ict, icy, icx = int(row["ct"]), int(row["cy"]), int(row["cx"])
-                (ct0, ct1), (cy0, cy1), (cx0, cx1) = g.chunk_cell_range(ict, icy, icx)
-                # overlap with crop in global input cell coords
-                ot0, ot1 = max(ct0, tt0), min(ct1, tt1)
-                oy0, oy1 = max(cy0, y0), min(cy1, y1)
-                ox0, ox1 = max(cx0, x0), min(cx1, x1)
-                if ot0 >= ot1 or oy0 >= oy1 or ox0 >= ox1:
-                    continue
-                # output cell coords of the overlap
-                gt0, gy0, gx0 = ot0 - tt0, oy0 - y0, ox0 - x0
-                gt1, gy1, gx1 = ot1 - tt0, oy1 - y0, ox1 - x0
-                # split by output chunk boundaries
-                tks = range(gt0 // gout.ct, (gt1 - 1) // gout.ct + 1)
-                yks = range(gy0 // gout.cy, (gy1 - 1) // gout.cy + 1)
-                xks = range(gx0 // gout.cx, (gx1 - 1) // gout.cx + 1)
-                for kt, ky, kx in itertools.product(tks, yks, xks):
-                    (pt0, pt1), (py0, py1), (px0, px1) = gout.chunk_cell_range(kt, ky, kx)
-                    st0, st1 = max(gt0, pt0), min(gt1, pt1)
-                    sy0, sy1 = max(gy0, py0), min(gy1, py1)
-                    sx0, sx1 = max(gx0, px0), min(gx1, px1)
-                    piece = t_[:, st0 + tt0 - ct0 : st1 + tt0 - ct0,
-                               sy0 + y0 - cy0 : sy1 + y0 - cy0,
-                               sx0 + x0 - cx0 : sx1 + x0 - cx0]
-                    if np.all(np.isnan(piece)):
-                        continue
-                    # encode dest offset (within output chunk) in ct/cy/cx columns
-                    rows.append(dict(chunk_id=gout.chunk_id(kt, ky, kx),
-                                     ct=st0 - pt0, cy=sy0 - py0, cx=sx0 - px0,
-                                     nb=piece.shape[0], nt=piece.shape[1], ny=piece.shape[2],
-                                     nx=piece.shape[3], data=pack_tensor(piece)))
-            yield pd.DataFrame(rows, columns=[f.name for f in piece_schema.fields]) if rows else \
-                pd.DataFrame({f.name: pd.Series(dtype="object") for f in piece_schema.fields})
+    if narrow:  # every output chunk is one piece of one input chunk: fuse
+        def place(cid, coords, t):
+            for ks, piece in pieces(coords, t):
+                yield gout.chunk_id(*ks), ks, piece
+
+        producer, chain = pruned._pending()
+        return Cube.produce(producer.then(chain, place), out_view, cube.bands, gout)
+
+    def cut(cid, coords, t):
+        return [dict(tkey=gout.chunk_id(*ks), src=cid, nb=p.shape[0], nt=p.shape[1], ny=p.shape[2],
+                     nx=p.shape[3], data=pack_tensor(p)) for ks, p in pieces(coords, t)]
 
     nb = len(cube.bands)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, pdf: pd.DataFrame):
         cid = int(key[0])
-        kt, ky, kx = gout.chunk_coords(cid)
-        nt, ny, nx = gout.chunk_shape(kt, ky, kx)
-        t_ = np.full((nb, nt, ny, nx), np.nan)
-        for _, row in pdf.iterrows():
-            p = tensor_of(row)
-            ot, oy, ox = int(row["ct"]), int(row["cy"]), int(row["cx"])
-            t_[:, ot : ot + p.shape[1], oy : oy + p.shape[2], ox : ox + p.shape[3]] = p
-        return pd.DataFrame([dict(chunk_id=cid, ct=kt, cy=ky, cx=kx, nb=nb, nt=nt, ny=ny, nx=nx,
-                                  data=pack_tensor(t_))])
+        ks = gout.chunk_coords(cid)
+        out = np.full((nb,) + gout.chunk_shape(*ks), np.nan)
+        for src, p in zip(pdf["src"].to_numpy(), piece_tensors(pdf)):
+            where_at = (at[a][i, ks[a]] for a, i in enumerate(g.chunk_coords(int(src))))
+            out[np.ix_(np.arange(nb), *where_at)] = p
+        yield cid, ks, out
 
-    out_df = df.mapInPandas(cut, piece_schema).groupBy("chunk_id").applyInPandas(assemble, CHUNK_SCHEMA)
-    return Cube(out_df, out_view, list(cube.bands), gout)
+    cut_pieces = pin_group_partitions(pruned.stream(cut, _PIECE_SCHEMA), "tkey", gout.n_chunks)
+    return Cube.produce(Producer(cut_pieces, ("tkey",), assemble), out_view, cube.bands, gout)

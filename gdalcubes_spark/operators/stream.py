@@ -17,9 +17,8 @@ from __future__ import annotations
 from typing import Callable, List, Optional
 
 import numpy as np
-import pandas as pd
 
-from gdalcubes_spark.cube import CHUNK_SCHEMA, Cube, pack_tensor, tensor_of
+from gdalcubes_spark.cube import Cube, split_time
 from gdalcubes_spark.grid import ChunkGrid
 
 
@@ -46,7 +45,6 @@ def apply_time(cube: Cube, fn: Callable[[np.ndarray], np.ndarray],
     """fn: (nb, nt) → (k, nt) per pixel (R apply_time, R/apply_time.R:115).
     The function is applied per pixel; vectorize inside fn where possible."""
     g = cube.chunking
-    view = cube.view
 
     def per_chunk(full: np.ndarray) -> np.ndarray:
         nb, nt, ny, nx = full.shape
@@ -61,38 +59,10 @@ def apply_time(cube: Cube, fn: Callable[[np.ndarray], np.ndarray],
         out = np.stack(outs, axis=-1).reshape(k, nt, ny, nx)
         return out
 
-    if g.nct == 1:
-        return cube.map_chunks(lambda t, coords: per_chunk(t), out_bands=names or cube.bands)
-
-    # gather chunk columns along t (same pattern as fill_time)
-    from pyspark.sql import functions as F
-
-    nb = len(cube.bands)
-
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ct")
-        icy, icx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
-        ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
-        full = np.full((nb, g.nt, ny, nx), np.nan)
-        for _, row in pdf.iterrows():
-            (t0, t1), _, _ = g.chunk_cell_range(int(row["ct"]), icy, icx)
-            full[:, t0:t1] = tensor_of(row)
-        out = per_chunk(full)
-        rows = []
-        for kt in range(g.nct):
-            (t0, t1), _, _ = g.chunk_cell_range(kt, icy, icx)
-            piece = out[:, t0:t1]
-            if np.all(np.isnan(piece)):
-                continue
-            rows.append(dict(chunk_id=g.chunk_id(kt, icy, icx), ct=kt, cy=icy, cx=icx,
-                             nb=out.shape[0], nt=t1 - t0, ny=ny, nx=nx, data=pack_tensor(piece)))
-        return pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields]) if rows else \
-            pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-
-    keyed = cube.df.withColumn("skey", F.col("cy").cast("long") * g.ncx + F.col("cx"))
-    df = keyed.groupBy("skey").applyInPandas(gather, CHUNK_SCHEMA)
     out_bands = names or list(cube.bands)
-    return Cube(df, view, out_bands, g)
+    if g.nct == 1:
+        return cube.map_chunks(lambda t, coords: per_chunk(t), out_bands=out_bands)
+    return cube.gather_time(lambda col, sp: split_time(g, per_chunk(col), *sp), bands=out_bands)
 
 
 def reduce_time_udf(cube: Cube, fn: Callable[[np.ndarray], np.ndarray],
@@ -100,69 +70,39 @@ def reduce_time_udf(cube: Cube, fn: Callable[[np.ndarray], np.ndarray],
     """R `reduce_time(x, FUN=...)` (stream_reduce_time.cpp:24-196): fn sees
     each pixel's FULL (nb, nt) series, returns (k,) — output nt == 1.
     The full time axis is assembled per spatial chunk before the call."""
-    from pyspark.sql import functions as F
-
-    from gdalcubes_spark.grid import ChunkGrid
-
     g, view = cube.chunking, cube.view
-    nb = len(cube.bands)
     gout = ChunkGrid(nt=1, ny=g.ny, nx=g.nx, ct=1, cy=g.cy, cx=g.cx)
     out_view = view.copy(dt=(view.t1 - view.t0) + 1, labels=None)
 
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ct")
-        icy, icx = int(pdf.iloc[0]["cy"]), int(pdf.iloc[0]["cx"])
-        ny, nx = int(pdf.iloc[0]["ny"]), int(pdf.iloc[0]["nx"])
-        full = np.full((nb, g.nt, ny, nx), np.nan)
-        for _, row in pdf.iterrows():
-            (t0, t1), _, _ = g.chunk_cell_range(int(row["ct"]), icy, icx)
-            full[:, t0:t1] = tensor_of(row)
-        cols = full.reshape(nb, g.nt, ny * nx)
-        outs = [np.atleast_1d(np.asarray(fn(cols[:, :, i]), dtype="float64"))
-                for i in range(ny * nx)]
+    def reduce(col: np.ndarray, sp):
+        nb, nt, ny, nx = col.shape
+        cols = col.reshape(nb, nt, ny * nx)
+        outs = [np.atleast_1d(np.asarray(fn(cols[:, :, i]), dtype="float64")) for i in range(ny * nx)]
         out = np.stack(outs, axis=-1).reshape(len(outs[0]), 1, ny, nx)
-        if np.all(np.isnan(out)):
-            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-        return pd.DataFrame([dict(chunk_id=gout.chunk_id(0, icy, icx), ct=0, cy=icy, cx=icx,
-                                  nb=out.shape[0], nt=1, ny=ny, nx=nx, data=pack_tensor(out))])
+        if not np.all(np.isnan(out)):
+            yield gout.chunk_id(0, *sp), (0, *sp), out
 
-    keyed = cube.df.withColumn("skey", F.col("cy").cast("long") * g.ncx + F.col("cx"))
-    df = keyed.groupBy("skey").applyInPandas(gather, CHUNK_SCHEMA)
-    out_bands = names or [f"udf{i + 1}" for i in range(1)]
-    return Cube(df, out_view, out_bands, gout)
+    return cube.gather_time(reduce, out_view, names or ["udf1"], gout)
 
 
 def reduce_space_udf(cube: Cube, fn: Callable[[np.ndarray], np.ndarray],
                      names: Optional[List[str]] = None) -> Cube:
     """R `reduce_space(x, FUN=...)` (stream_reduce_space.cpp): fn sees each
     time slice's full (nb, ny, nx) plane, returns (k,) — output 1×1/slice."""
-    from gdalcubes_spark.grid import ChunkGrid
-
     g, view = cube.chunking, cube.view
-    nb = len(cube.bands)
     gout = ChunkGrid(nt=g.nt, ny=1, nx=1, ct=g.ct, cy=1, cx=1)
     out_view = view.copy()
     out_view.set_x_axis(view.left, view.right, n=1)
     out_view.set_y_axis(view.bottom, view.top, n=1)
 
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ict = int(key[0])
-        (t0c, t1c), _, _ = g.chunk_cell_range(ict, 0, 0)
-        ntc = t1c - t0c
-        plane = np.full((nb, ntc, g.ny, g.nx), np.nan)
-        for _, row in pdf.iterrows():
-            _, (y0, y1), (x0, x1) = g.chunk_cell_range(int(row["ct"]), int(row["cy"]), int(row["cx"]))
-            plane[:, :, y0:y1, x0:x1] = tensor_of(row)
-        outs = [np.atleast_1d(np.asarray(fn(plane[:, t]), dtype="float64")) for t in range(ntc)]
+    def reduce(slab: np.ndarray, ict: int):
+        ntc = slab.shape[1]
+        outs = [np.atleast_1d(np.asarray(fn(slab[:, t]), dtype="float64")) for t in range(ntc)]
         out = np.stack(outs, axis=1).reshape(len(outs[0]), ntc, 1, 1)
-        if np.all(np.isnan(out)):
-            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
-        return pd.DataFrame([dict(chunk_id=gout.chunk_id(ict, 0, 0), ct=ict, cy=0, cx=0,
-                                  nb=out.shape[0], nt=ntc, ny=1, nx=1, data=pack_tensor(out))])
+        if not np.all(np.isnan(out)):
+            yield gout.chunk_id(ict, 0, 0), (ict, 0, 0), out
 
-    df = cube.df.groupBy("ct").applyInPandas(gather, CHUNK_SCHEMA)
-    out_bands = names or ["udf1"]
-    return Cube(df, out_view, out_bands, gout)
+    return cube.gather_space(reduce, out_view, names or ["udf1"], gout)
 
 
 def predict(cube: Cube, model, output_names: Optional[List[str]] = None,

@@ -27,26 +27,19 @@ Spark shapes:
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import Optional, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gdalcubes_spark.cube import Cube, Producer, chunk_items, pack_tensor, pin_group_partitions
+from gdalcubes_spark.cube import Cube, Producer, pack_tensor, piece_tensors, pin_group_partitions, split_time
 from gdalcubes_spark.operators.reduce import parse_pairs
 
 _WINDOW_REDUCERS = {
     "mean": np.nanmean, "sum": np.nansum, "count": lambda a, axis: np.sum(~np.isnan(a), axis=axis),
     "prod": np.nanprod, "min": np.nanmin, "max": np.nanmax, "median": np.nanmedian,
 }
-
-
-def _pieces(pdf: pd.DataFrame):
-    """The (nb, nt, ny, nx) tensors of a frame of halo pieces."""
-    for nb, nt, ny, nx, data in zip(*(pdf[c].to_numpy() for c in ("nb", "nt", "ny", "nx", "data"))):
-        yield np.frombuffer(data, dtype="<f8").reshape(nb, nt, ny, nx)
 
 
 def _nanreduce_window(name: str, w: np.ndarray) -> np.ndarray:
@@ -136,7 +129,7 @@ def window_time(cube: Cube, window: Sequence[int], reducer=None, kernel=None) ->
         # window computed from neighbor halo data (window_time.cpp:160-251);
         # the all-NaN output check below keeps the missing-chunk invariant.
         padded = np.full((nb_in, l + ntc + r, ny, nx), np.nan)
-        for off, p in zip(pdf["off"].to_numpy(), _pieces(pdf)):
+        for off, p in zip(pdf["off"].to_numpy(), piece_tensors(pdf)):
             padded[:, off : off + p.shape[1]] = p
         out = compute(padded, ntc)
         if not np.all(np.isnan(out)):
@@ -267,7 +260,7 @@ def window_space(cube: Cube, reducer=None, kernel=None, window: Optional[Sequenc
         # NOTE: no is_core guard — see window_time.assemble; an all-NaN core
         # with live neighbor halos must still produce windowed values.
         padded = np.full((nb_in, ntc, ny + 2 * hy, nx + 2 * hx), np.nan)
-        for oy, ox, p in zip(pdf["offy"].to_numpy(), pdf["offx"].to_numpy(), _pieces(pdf)):
+        for oy, ox, p in zip(pdf["offy"].to_numpy(), pdf["offx"].to_numpy(), piece_tensors(pdf)):
             padded[:, :, oy : oy + p.shape[2], ox : ox + p.shape[3]] = p
         padded = _pad_plane(padded, hy, hx, pad, pad_value,
                             at_top=(y0 == 0), at_bottom=(y1 == g.ny),
@@ -328,27 +321,14 @@ def _fill_series(v: np.ndarray, method: str) -> np.ndarray:
 def fill_time(cube: Cube, method: str = "linear") -> Cube:
     if method not in ("near", "linear", "locf", "nocb"):
         raise ValueError(f"unknown fill method {method!r} (fill_time.h:20-47)")
-    view, g = cube.view, cube.chunking
+    g = cube.chunking
     if g.nct == 1:
         def fn(t: np.ndarray, coords):
             return _fill_series(np.moveaxis(t, 1, 0), method).transpose(1, 0, 2, 3)
         return cube.map_chunks(fn)
 
     # gather the full time column per spatial chunk (fill scans arbitrarily far)
-    def gather(key, pdf: pd.DataFrame):
-        full = None
-        for _, (ict, icy, icx), t in chunk_items(key, pdf):
-            if full is None:
-                full = np.full((t.shape[0], g.nt) + t.shape[2:], np.nan)
-            (t0, t1), _, _ = g.chunk_cell_range(ict, icy, icx)
-            full[:, t0:t1] = t
-        filled = _fill_series(np.moveaxis(full, 1, 0), method).transpose(1, 0, 2, 3)
-        for kt in range(g.nct):
-            (t0, t1), _, _ = g.chunk_cell_range(kt, icy, icx)
-            piece = filled[:, t0:t1]
-            if not np.all(np.isnan(piece)):
-                yield g.chunk_id(kt, icy, icx), (kt, icy, icx), piece
+    def fill(col: np.ndarray, sp):
+        yield from split_time(g, _fill_series(np.moveaxis(col, 1, 0), method).transpose(1, 0, 2, 3), *sp)
 
-    keyed = cube.df.withColumn("skey", F.col("cy").cast("long") * g.ncx + F.col("cx"))
-    pinned = pin_group_partitions(keyed, "skey", g.ncy * g.ncx)
-    return Cube.produce(Producer(pinned, ("skey",), gather), view, cube.bands, g)
+    return cube.gather_time(fill)

@@ -478,16 +478,15 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
 
     vleft, vtop = view.left, view.top
 
-    def build(key, pdf: pd.DataFrame):
-        cid = int(key[0])
-        kt, ky, kx = g.chunk_coords(cid)
-        (t0c, t1c), (yy0, yy1), (xx0, xx1) = g.chunk_cell_range(kt, ky, kx)
-        nyc, nxc = yy1 - yy0, xx1 - xx0
+    def samples(cid: int, pdf: pd.DataFrame):
+        """(image_id, lt, vals, oy, ox) per image of one chunk's rows, in
+        image_id order: the image sampled onto the chunk's cells and masked.
+        The build and the salted partial share this loop."""
+        (t0c, t1c), (yy0, yy1), (xx0, xx1) = g.chunk_cell_range(*g.chunk_coords(cid))
         xs = vleft + (np.arange(xx0, xx1) + 0.5) * dx
         ys = vtop - (np.arange(yy0, yy1) + 0.5) * dy
-        st = _AggState(agg, (nb, t1c - t0c, nyc, nxc))
         pdf = pdf.sort_values("image_id")
-        c = {k: pdf[k].to_numpy() for k in ("it", "bytes", "fmt", "nleft", "nright", "nbottom",
+        c = {k: pdf[k].to_numpy() for k in ("it", "image_id", "bytes", "fmt", "nleft", "nright", "nbottom",
                                             "ntop", "epsg", "vleft", "vright", "vbottom", "vtop")}
         for i in range(len(pdf)):  # plain array indexing — iterrows is ~10× slower
             lt = int(c["it"][i]) - t0c
@@ -502,20 +501,24 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
                 continue
             vals, oy, ox = res
             if mask is not None:
-                bad = mask.apply(vals[mask_idx])
-                vals = np.where(bad[None, ...], np.nan, vals)
+                vals = np.where(mask.apply(vals[mask_idx])[None, ...], np.nan, vals)
+            yield c["image_id"][i], lt, vals, oy, ox
+
+    def build(key, pdf: pd.DataFrame):
+        cid = int(key[0])
+        coords = g.chunk_coords(cid)
+        st = _AggState(agg, (nb,) + g.chunk_shape(*coords))
+        for _, lt, vals, oy, ox in samples(cid, pdf):
             st.update(vals, lt, oy, ox)
         t = st.finalize()
         if out_idx is not None and len(out_idx) != t.shape[0]:
             t = t[out_idx]  # drop the mask-only band from the output
         if not np.all(np.isnan(t)):
-            yield cid, (kt, ky, kx), t
+            yield cid, coords, t
 
     out_bands = list(band_sel) if band_sel is not None else list(bands)
     if salt > 0 and agg in DECOMPOSABLE:
-        producer = _salted_scan(exploded, g, mask, salt,
-                                build_ctx=(vleft, vtop, dx, dy, view_epsg, resampling, nb, agg,
-                                           mask_idx, nb_payload, band_idx, out_idx, use_overviews))
+        producer = _salted_scan(exploded, g, nb, agg, salt, samples, out_idx)
     else:
         # decode/warp cost per image-ref byte is far above columnar work: pin
         # the build to one wave of tasks (see pin_group_partitions)
@@ -527,15 +530,12 @@ def raster_cube(images: DataFrame, view: CubeView, bands: List[str],
     return cube
 
 
-def _salted_scan(exploded: DataFrame, g: ChunkGrid, mask: Optional[ImageMask], salt: int,
-                 build_ctx) -> Producer:
+def _salted_scan(exploded: DataFrame, g: ChunkGrid, nb: int, agg: str, salt: int, samples,
+                 out_idx: Optional[List[int]]) -> Producer:
     """Two-phase skew-proof scan: partial aggregation per (chunk_id, salt
     bucket of image_id), then merge per chunk_id, the returned producer.
     Bounds any single task to ~|images_in_chunk|/salt decodes (north-rule
-    skew handling)."""
-    (vleft, vtop, dx, dy, view_epsg, resampling, nb, agg, mask_idx,
-     nb_payload, band_idx, out_idx, use_overviews) = build_ctx
-
+    skew handling). samples(cid, pdf) is the build's per-image loop."""
     from pyspark.sql import types as T
 
     part_schema = T.StructType([
@@ -556,34 +556,12 @@ def _salted_scan(exploded: DataFrame, g: ChunkGrid, mask: Optional[ImageMask], s
 
     def partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
         cid = int(key[0])
-        kt, ky, kx = g.chunk_coords(cid)
-        (t0c, t1c), (yy0, yy1), (xx0, xx1) = g.chunk_cell_range(kt, ky, kx)
-        shape = (nb, t1c - t0c, yy1 - yy0, xx1 - xx0)
-        xs = vleft + (np.arange(xx0, xx1) + 0.5) * dx
-        ys = vtop - (np.arange(yy0, yy1) + 0.5) * dy
+        shape = (nb,) + g.chunk_shape(*g.chunk_coords(cid))
         st = _AggState(agg, shape)
         ordarr = np.full(shape, np.nan) if agg in ("first", "last") else None
-        pdf = pdf.sort_values("image_id")
-        c = {k: pdf[k].to_numpy() for k in ("it", "image_id", "bytes", "fmt", "nleft", "nright",
-                                            "nbottom", "ntop", "epsg", "vleft", "vright",
-                                            "vbottom", "vtop")}
-        for i in range(len(pdf)):
-            lt = int(c["it"][i]) - t0c
-            if not (0 <= lt < t1c - t0c):
-                continue
-            res = _sample_image(c["bytes"][i], c["fmt"][i],
-                                (c["nleft"][i], c["nright"][i], c["nbottom"][i], c["ntop"][i]),
-                                int(c["epsg"][i]), xs, ys, view_epsg, resampling, nb_payload,
-                                (c["vleft"][i], c["vright"][i], c["vbottom"][i], c["vtop"][i]),
-                                band_idx, dxv=dx, dyv=dy, use_overviews=use_overviews)
-            if res is None:
-                continue
-            vals, oy, ox = res
-            if mask is not None:
-                bad = mask.apply(vals[mask_idx])
-                vals = np.where(bad[None, ...], np.nan, vals)
+        for image_id, lt, vals, oy, ox in samples(cid, pdf):
             if agg in ("first", "last"):
-                o = float(_img_order(str(c["image_id"][i])))
+                o = float(_img_order(str(image_id)))
                 ok = ~np.isnan(vals)
                 hy, wx = vals.shape[1], vals.shape[2]
                 a = st.acc[:, lt, oy : oy + hy, ox : ox + wx]
@@ -602,9 +580,8 @@ def _salted_scan(exploded: DataFrame, g: ChunkGrid, mask: Optional[ImageMask], s
 
     def merge(key, pdf: pd.DataFrame):
         cid = int(key[0])
-        kt, ky, kx = g.chunk_coords(cid)
-        (t0c, t1c), (yy0, yy1), (xx0, xx1) = g.chunk_cell_range(kt, ky, kx)
-        shape = (nb, t1c - t0c, yy1 - yy0, xx1 - xx0)
+        coords = g.chunk_coords(cid)
+        shape = (nb,) + g.chunk_shape(*coords)
         acc = np.full(shape, np.nan)
         cnt = np.zeros(shape) if agg == "mean" else None
         acc_ord = np.full(shape, np.nan) if agg in ("first", "last") else None
@@ -639,7 +616,7 @@ def _salted_scan(exploded: DataFrame, g: ChunkGrid, mask: Optional[ImageMask], s
         if out_idx is not None and len(out_idx) != acc.shape[0]:
             acc = acc[out_idx]
         if not np.all(np.isnan(acc)):
-            yield cid, (kt, ky, kx), acc
+            yield cid, coords, acc
 
     salted = exploded.withColumn("_salt", F.pmod(F.xxhash64("image_id"), F.lit(salt)))
     part = (pin_group_partitions(salted, ["chunk_id", "_salt"], g.n_chunks * salt)

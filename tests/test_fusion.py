@@ -18,8 +18,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from gdalcubes_spark.cube import Cube, dummy_cube
+from gdalcubes_spark.cube import Cube, cube_from_array, dummy_cube, read_parquet_cube
+from gdalcubes_spark.geom import rect_wkt
 from gdalcubes_spark.grid import ChunkGrid, CubeView
+from gdalcubes_spark.operators.stream import reduce_space_udf, reduce_time_udf
+from gdalcubes_spark.packing import Packing
 
 
 def _view():
@@ -41,8 +44,8 @@ class TestFusion:
               .filter_pixel("x > 1")
               .apply_pixel("x - b", names=["y"])
               .reduce_time("mean(y)"))
-        # 1 source generator (dummy_cube) + 1 fused chain of 4 narrow ops
-        assert _py_nodes(r.df) == 2
+        # dummy_cube's producer with the fused chain of 4 narrow ops
+        assert _py_nodes(r.df) == 1
         a = r.collect_array()
         assert a.shape == (1, 1, 8, 8)
         assert np.allclose(a, 4.0)  # x=6, y=6-2=4, mean over 4 months
@@ -74,14 +77,15 @@ class TestFusion:
         """A pending narrow chain composes into the PRE-SHUFFLE UDF of wide
         ops (reduce partial, window halo emit, aggregate cut, cells) — the
         standalone chain node disappears. nct>1 + combinable reducer forces
-        the partial/merge path: dummy source + fused partial + merge = 3
-        Python nodes (was 4 with a separate apply_pixel node)."""
+        the partial/merge path: dummy producer with the fused chain and
+        partial + merge = 2 Python nodes (was 4 with a separate dummy source
+        and apply_pixel node)."""
         v = _view()
         g = ChunkGrid(nt=v.nt, ny=v.ny, nx=v.nx, ct=1, cy=4, cx=4)  # nct=4
         c = dummy_cube(spark, v, band_names=["b"], fill=2.0, chunking=g)
         r = c.apply_pixel("b*3", names=["x"]).reduce_time("mean(x)")
         plan = r.df._jdf.queryExecution().executedPlan().toString()
-        assert _py_nodes(r.df) + plan.count("FlatMapGroupsInPandas") == 3
+        assert _py_nodes(r.df) + plan.count("FlatMapGroupsInPandas") == 2
         a = r.collect_array()
         assert a.shape == (1, 1, 8, 8)
         assert np.allclose(a, 6.0)
@@ -89,9 +93,21 @@ class TestFusion:
     def test_chain_fuses_into_cells(self, spark):
         c = dummy_cube(spark, _view(), band_names=["b"], fill=1.5)
         cells = c.apply_pixel("b*4", names=["y"]).cells()
-        assert _py_nodes(cells) == 2  # dummy source + fused cells gen
+        assert _py_nodes(cells) == 1  # dummy producer + chain + fused cells explode
         row = cells.limit(1).collect()[0]
         assert row["value"] == 6.0 and row["band"] == "y"
+
+    def test_rename_bands_keeps_fusion(self, spark):
+        """rename_bands keeps the producer and pending chain: the next narrow
+        op fuses exactly as it does without the rename."""
+        v = _view()
+        g = ChunkGrid(nt=v.nt, ny=v.ny, nx=v.nx, ct=2, cy=4, cx=4)
+        p = dummy_cube(spark, v, nbands=2, fill=2.0, chunking=g, band_names=["a", "b"]) \
+            .apply_pixel(["a+b", "a-b"], names=["a", "b"])
+        renamed = p.rename_bands({"a": "x"}).apply_pixel(["x*2", "b"], names=["x", "b"])
+        plain = p.apply_pixel(["a*2", "b"], names=["a", "b"])
+        assert _py_nodes(renamed.df) == _py_nodes(plain.df) == 1
+        assert np.array_equal(renamed.collect_array(), plain.collect_array())
 
     def test_all_nan_intermediate_elides(self, spark):
         """A fn producing all-NaN mid-chain drops the chunk exactly like the
@@ -192,3 +208,98 @@ class TestProducerFusion:
             assert sorted(cached.collect()) == sorted(fused.collect())
         finally:
             c.df.unpersist()
+
+
+# ---------------------------------------------------------------------------
+# Every op moved onto Producer / Cube.stream against numpy on a ct=2, nb=2
+# cube with chunk-unaligned windows, through both consumer routes: stored
+# chunk rows, and chunks made by a producer (identity apply_pixel).
+
+_ARR_VIEW = dict(srs="EPSG:4326", left=0, right=10, top=9, bottom=0, dx=1.0, dy=1.0,
+                 t0="2020-01-01", t1="2020-05-31", dt="P1M")
+
+
+def _arr():
+    arr = np.random.default_rng(11).random((2, 5, 9, 10)) * 10
+    arr[:, :, :3, :4] = np.nan  # one all-NaN chunk column: elided everywhere
+    arr[0, 1] = np.nan
+    arr[:, 4, 5:, 6:] = np.nan
+    return arr
+
+
+def _locf(a):
+    out = a.copy()
+    for t in range(1, a.shape[1]):
+        out[:, t] = np.where(np.isnan(out[:, t]), out[:, t - 1], out[:, t])
+    return out
+
+
+def _packed_roundtrip(c, spark, tmp):
+    c.write_parquet(str(tmp / "packed"), packing=Packing(type="uint16", scale=0.001))
+    return read_parquet_cube(spark, str(tmp / "packed"))
+
+
+_OPS = {
+    # name: (op(cube, spark, tmp) -> Cube, numpy reference of the array)
+    "slice_time": (lambda c, s, p: c.slice_time(it=3), lambda a: a[:, 3:4]),
+    "slice_space": (lambda c, s, p: c.slice_space(ix=5, iy=4), lambda a: a[:, :, 4:5, 5:6]),
+    "select_time": (lambda c, s, p: c.select_time(["2020-04", "2020-02", "2020-04"]), lambda a: a[:, [3, 1, 3]]),
+    "select_time_one_chunk": (lambda c, s, p: c.select_time(["2020-04", "2020-03"]), lambda a: a[:, [3, 2]]),
+    "crop_indices": (lambda c, s, p: c.crop_indices(ix0=1, ix1=7, iy0=2, iy1=8, it0=1, it1=4),
+                     lambda a: a[:, 1:4, 2:8, 1:7]),
+    "crop_aligned": (lambda c, s, p: c.crop_indices(ix0=4, ix1=8, iy0=3, iy1=9, it0=2, it1=4),
+                     lambda a: a[:, 2:4, 3:9, 4:8]),
+    "crop": (lambda c, s, p: c.crop(left=1, right=7, bottom=1, top=7, t0="2020-02", t1="2020-04"),
+             lambda a: a[:, 1:4, 2:8, 1:7]),
+    "rename_bands": (lambda c, s, p: c.rename_bands({"a": "x"}), lambda a: a),
+    "apply_time": (lambda c, s, p: c.apply_time(lambda v: v[::-1] * 2.0, names=["u", "w"]),
+                   lambda a: a[::-1] * 2.0),
+    "reduce_time_udf": (lambda c, s, p: reduce_time_udf(c, lambda v: v[:, 0] + v[:, -1], names=["p", "q"]),
+                        lambda a: (a[:, :1] + a[:, -1:])),
+    "reduce_space_udf": (lambda c, s, p: reduce_space_udf(c, lambda v: v[:, 4, 5] - v[:, 8, 9], names=["p", "q"]),
+                         lambda a: a[:, :, 4:5, 5:6] - a[:, :, 8:9, 9:10]),
+    "reduce_time_median": (lambda c, s, p: c.reduce_time("median(a)", "Q1(b)"),
+                           lambda a: np.stack([np.nanmedian(a[0], axis=0),
+                                               np.nanpercentile(a[1], 25, axis=0)])[:, None]),
+    "reduce_space_median": (lambda c, s, p: c.reduce_space("median(a)", "max(b)"),
+                            lambda a: np.stack([np.nanmedian(a[0], axis=(1, 2)),
+                                                np.nanmax(a[1], axis=(1, 2))])[:, :, None, None]),
+    "fill_time": (lambda c, s, p: c.fill_time("locf"), _locf),
+    # every cell centre of the cell-aligned rectangle is inside: a crop
+    "filter_geom": (lambda c, s, p: c.filter_geom(rect_wkt(1, 1, 7, 7)), lambda a: a[:, :, 2:8, 1:7]),
+    "join_bands": (lambda c, s, p: c.join_bands(c.rename_bands({"a": "c", "b": "d"})),
+                   lambda a: np.concatenate([a, a])),
+    "read_parquet_packed": (_packed_roundtrip, lambda a: np.round(a / 0.001) * 0.001),
+}
+
+
+class TestPortedOpsValueIdentity:
+    @pytest.mark.parametrize("route", ["rows", "producer"])
+    @pytest.mark.parametrize("op", sorted(_OPS))
+    def test_matches_numpy(self, spark, tmp_path, op, route):
+        arr = _arr()
+        v = CubeView.create(**_ARR_VIEW)
+        g = ChunkGrid(nt=v.nt, ny=v.ny, nx=v.nx, ct=2, cy=3, cx=4)
+        c = cube_from_array(spark, arr, v, chunking=g, band_names=["a", "b"])
+        if route == "producer":
+            c = c.apply_pixel(["a", "b"], names=["a", "b"])
+        make, ref = _OPS[op]
+        out = make(c, spark, tmp_path)
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)  # all-NaN reductions
+            want = ref(arr)
+        got = out.collect_array()
+        assert got.shape == want.shape == out.shape
+        if op == "read_parquet_packed":
+            assert np.allclose(got, want, rtol=0, atol=1e-9, equal_nan=True)
+        else:
+            assert np.array_equal(got, want, equal_nan=True)
+        # the chunk grid: one row per chunk that is not all-NaN, and its id
+        # and coordinates agree with the output grid
+        og = out.chunking
+        rows = out.df.select("chunk_id", "ct", "cy", "cx").collect()
+        assert sorted(r["chunk_id"] for r in rows) == [
+            cid for cid in range(og.n_chunks)
+            if not np.all(np.isnan(want[(slice(None),) + tuple(slice(*r) for r in og.chunk_cell_range(
+                *og.chunk_coords(cid)))]))]
+        assert all(og.chunk_coords(r["chunk_id"]) == (r["ct"], r["cy"], r["cx"]) for r in rows)
